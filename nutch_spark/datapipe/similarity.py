@@ -8,8 +8,8 @@
 - lsh_topk: random-hyperplane LSH — corpus and queries are bucketed by sign
   patterns; only same-bucket pairs are scored. The 100 TB path: shuffle is
   O(rows) on bucket keys instead of a full cross product.
-- embedding_near_dup_pairs: all corpus pairs above a cosine threshold via
-  the same LSH bucketing.
+- text_embed_neardup_pairs: all corpus pairs above a cosine threshold via
+  sign-pattern LSH bucketing of hashed text embeddings.
 
 Hyperplanes are generated from a seeded RNG on the driver (tiny: dim x bits
 floats) and inlined as literals — effectively a broadcast.
@@ -77,8 +77,8 @@ def _cell_pair_dropper(threshold: float, round_sim: int):
     (exact, as ``x.cast("double")``), the denominator multiplies the two
     prefolded norms once then divides once, and the round-then-compare
     decision is the single-compare form proven by :func:`_ge_round_cut`.
-    Requires all vectors in a cell to share one dimension (the corpus
-    contract; zip_with would null-pad instead)."""
+    The caller sweeps per (cell, dimension) over rows with a non-NULL
+    norm, so every vector here has one length and no NULL element."""
     v_star = _ge_round_cut(threshold, round_sim)
 
     def dropped(pdf):
@@ -190,7 +190,7 @@ def hashed_embedding(
 def _row_embed_apply(text: Column | str, dim: int, fn) -> Column:
     """Shared per-row skeleton for the stream-safe featurizer expressions:
     tokenize, hash each token ONCE (the hash array binds to a lambda
-    variable — the same evaluate-once trick as _l2_argmin_sql), build the
+    variable — the same evaluate-once trick as _pq_code_sql), build the
     integer bucket-sum array ``e`` with ``dim`` integer folds, and apply
     ``fn(e)``. No explode, no aggregation — a pure map expression, so a
     STREAM can use it ahead of its one stateful operator."""
@@ -413,7 +413,7 @@ def lsh_bucket(vec: str, planes: list[list[float]]) -> Column:
     """Sign-pattern bucket id (string of 0/1) for random-hyperplane LSH
     over column name ``vec``. The whole expression renders as ONE SQL
     string: constructing bits-many HOF Columns through py4j costs ~1 s
-    of driver chatter per plan (see _cents_rank), the parser does it in
+    of driver chatter per plan (see _cell_rank), the parser does it in
     a fraction."""
     bits = []
     for plane in planes:
@@ -499,186 +499,154 @@ def _dlit(x: float) -> str:
     return f"{r}D"
 
 
-def _cents_rank(vcol: str, norm_col: str, cents, round_sim: int = 6) -> Column:
-    """Cell ids ordered nearest-first against literal centroids. One
-    struct array, each centroid DOT computed exactly once — a chained
-    when/greatest fold would duplicate every cosine subtree per
-    comparison and blow the plan up exponentially (the first draft took
-    minutes to analyze). The row norm comes in as column ``norm_col``
-    (computed ONCE per row) and each centroid norm as a driver-side
-    literal — recomputing the row norm inside all K cosines tripled the
-    higher-order-function evaluation cost per row. Same IEEE doubles as
-    cosine(): identical accumulation order, math.sqrt == JVM sqrt. The
-    whole expression is built as ONE SQL string (F.expr): constructing
-    K struct/HOF Columns through py4j cost ~1 s of driver chatter per
-    plan, the parser does it in ~0.2 s. Cosines are rounded before
-    ranking so the cid tie-break matches the SQL oracle's
-    round(s, 6) ... ORDER BY s DESC, cid exactly."""
-    arr = _cents_struct_array_sql(vcol, norm_col, cents, round_sim)
-    return F.expr(f"transform(array_sort({arr}), x -> x.cid)")
-
-
-def _cents_df(spark, cents) -> DataFrame:
-    """The one-row codebook DataFrame :func:`_with_cents` attaches. Callers
-    that attach the same codebook to several sides of one query (ivf_topk's
-    corpus and queries) build it ONCE and crossJoin the same object so the
-    broadcast exchange is reused instead of rebuilt per side."""
-    lut = [[float(x) for x in cv] for _cid, cv in cents]
-    norms = [
-        math.sqrt(sum(float(x) * float(x) for x in cv)) for _cid, cv in cents
-    ]
-    cids = [int(cid) for cid, _cv in cents]
-    return spark.createDataFrame(
-        [(lut, norms, cids)],
-        schema=(
-            "_cb_lut array<array<double>>, _cb_norms array<double>,"
-            " _cb_cids array<int>"
-        ),
+def _md5_seed(corpus: DataFrame, *, vec: str, key: str, n: int) -> list[list[float]]:
+    """The ``n`` corpus vectors with the smallest md5(key), as double
+    lists — the one seed of every codebook in this module (IVF and
+    SemDeDup centroids, every PQ subspace's codewords): a pseudo-random
+    but reproducible spread any engine can compute (the oracles' ``ORDER
+    BY md5(CAST(key AS VARCHAR)) LIMIT n``). Only ``n`` rows reach the
+    driver (TakeOrderedAndProject); the corpus is never collected."""
+    rows = (
+        corpus.select(key, vec)
+        .orderBy(F.md5(F.col(key).cast("string")))
+        .limit(n)
+        .collect()
     )
+    return [[float(x) for x in r[1]] for r in rows]
 
 
-def _with_cents(df: DataFrame, cents) -> DataFrame:
-    """Attach the centroid codebook to ``df`` as three one-row BROADCAST
-    columns (`_cb_lut` array<array<double>>, `_cb_norms` array<double>,
-    `_cb_cids` array<int>) instead of inlining K*dim literals into the
-    expression tree (guide §3 broadcast-the-small-side + §5 driver/plan
-    cost). The values are the exact doubles the literal form embedded
-    (Python float -> JVM double is bit-exact either way; the norms use
-    the same math.sqrt fold), so every downstream fold sees identical
-    IEEE inputs and certified hashes cannot move. What changes is the
-    PLAN: the expression tree that used to grow with K*dim (re-analyzed
-    and re-codegen'd for every Lloyd round, ~0.3-1 s of driver time per
-    round, and shipped in every task closure) is now constant-size and
-    IDENTICAL across rounds — Spark's whole-stage-codegen cache keys on
-    the generated source, so round 2+ reuse round 1's compiled class,
-    and at 100 TB the task closure carries a broadcast id, not a
-    codebook."""
-    return df.crossJoin(F.broadcast(_cents_df(df.sparkSession, cents)))
+def _with_codebook(cbs, *dfs: DataFrame) -> list[DataFrame]:
+    """Attach ``m`` codebooks — ``cbs[j]`` is subspace j's [(cid,
+    codeword)] list, cid == position — to each of ``dfs`` as ONE one-row
+    BROADCAST table: `_cb` array<array<array<double>>> (m × ks ×
+    codeword) and `_cb_norms` array<array<double>> (each codeword's
+    norm, the same left fold as vec_norm), instead of inlining the
+    codebook into the expression tree as literals (guide §3
+    broadcast-the-small-side + §5 driver/plan cost). The doubles are
+    exactly the ones a literal form would embed (Python float -> JVM
+    double is bit-exact either way), so every downstream fold sees
+    identical IEEE inputs. What the broadcast buys is the PLAN: a
+    constant-size expression tree, IDENTICAL across Lloyd rounds — the
+    whole-stage-codegen cache keys on the generated source, so round 2+
+    reuse round 1's compiled class — and at 100 TB the task closure
+    carries a broadcast id, not a codebook. All ``dfs`` share the same
+    one-row table, so a query attaching the codebook to several sides
+    (ivf_topk's corpus and queries) builds the broadcast once."""
+    lut = [[[float(x) for x in cw] for _cid, cw in cb] for cb in cbs]
+    norms = [[math.sqrt(sum(x * x for x in cw)) for cw in cb] for cb in lut]
+    one = F.broadcast(
+        dfs[0].sparkSession.createDataFrame(
+            [(lut, norms)],
+            schema="_cb array<array<array<double>>>, _cb_norms array<array<double>>",
+        )
+    )
+    return [df.crossJoin(one) for df in dfs]
 
 
-def _cents_struct_array_cols_sql(
-    vcol: str, norm_col: str, round_sim: int = 6
-) -> str:
-    """Column-reference twin of :func:`_cents_struct_array_sql`: the same
-    (neg=-round(cosine), cid) struct-array expression, but reading the
-    codebook from the `_cb_*` columns :func:`_with_cents` attaches rather
-    than from plan literals. Fold order, rounding and tie-break are
-    token-for-token identical — only the array SOURCE differs — so the
-    selected cells (and every certified hash downstream) are unchanged."""
+def _cell_rank(vcol: str, norm_col: str, round_sim: int = 6) -> Column:
+    """Codebook-0 cells ordered nearest-first for each row: the sorted
+    array of (neg=-round(cosine, round_sim), cid) structs over the
+    centroids :func:`_with_codebook` attached; ``[0].cid`` is the
+    assigned cell, a prefix of ``.cid`` the probe list, ``[0].neg`` the
+    (negated) centroid similarity. ONE transform over the codebook with
+    each centroid dot computed exactly once — a chained when/greatest
+    fold duplicates every cosine subtree per comparison and blows the
+    plan up exponentially. The row norm comes in as column ``norm_col``
+    (computed ONCE per row) and each centroid norm from `_cb_norms`;
+    the dot is the same left fold, in the same element order, with the
+    same double widening, as cosine(). Cosines are rounded before
+    sorting so the cid tie-break matches the SQL oracle's round(s, 6)
+    ... ORDER BY s DESC, cid exactly. Built as ONE SQL string: K
+    struct/HOF Columns through py4j cost ~1 s of driver chatter per
+    plan, the parser does it in a fraction."""
     dot = (
         f"aggregate(zip_with(`{vcol}`, cw, (x, y) ->"
         " cast(x as double) * y), 0.0D, (acc, x) -> acc + x)"
     )
-    return (
-        "transform(`_cb_lut`, (cw, i) -> named_struct("
-        f"'neg', -round({dot} / (`{norm_col}` * element_at(`_cb_norms`, i + 1)),"
-        f" {round_sim}), 'cid', element_at(`_cb_cids`, i + 1)))"
+    return F.expr(
+        "array_sort(transform(`_cb`[0], (cw, i) -> named_struct("
+        f"'neg', -round({dot} / (`{norm_col}` * `_cb_norms`[0][i]),"
+        f" {round_sim}), 'cid', i)))"
     )
 
 
-def _cents_rank_cols(vcol: str, norm_col: str, round_sim: int = 6) -> Column:
-    """Column-reference twin of :func:`_cents_rank` (see
-    :func:`_cents_struct_array_cols_sql`)."""
-    arr = _cents_struct_array_cols_sql(vcol, norm_col, round_sim)
-    return F.expr(f"transform(array_sort({arr}), x -> x.cid)")
-
-
-def _cents_struct_array_sql(
-    vcol: str, norm_col: str, cents, round_sim: int = 6
-) -> str:
-    """SQL text for the (neg=-round(cosine), cid) struct array — see
-    _cents_rank. One ``transform`` over the centroid array literal (with
-    parallel norm/cid literals indexed by the lambda's position argument)
-    instead of K unrolled cosine structs: the same compile-time fix as
-    _l2_argmin_sql — the fold order, rounding, and tie-break cids are
-    identical, so certified hashes are unchanged."""
-    lut = "array(" + ",".join(
-        "array(" + ",".join(_dlit(x) for x in cv) + ")" for _cid, cv in cents
-    ) + ")"
-    norms = "array(" + ",".join(
-        _dlit(math.sqrt(sum(float(x) * float(x) for x in cv)))
-        for _cid, cv in cents
-    ) + ")"
-    cids = "array(" + ",".join(str(cid) for cid, _cv in cents) + ")"
-    dot = (
-        f"aggregate(zip_with(`{vcol}`, cw, (x, y) ->"
-        " cast(x as double) * y), 0.0D, (acc, x) -> acc + x)"
-    )
-    return (
-        f"transform({lut}, (cw, i) -> named_struct("
-        f"'neg', -round({dot} / (`{norm_col}` * element_at({norms}, i + 1)),"
-        f" {round_sim}), 'cid', element_at({cids}, i + 1)))"
-    )
-
-
-def _lloyd_refine(
-    corpus: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    *,
-    vec: str,
-    n_iter: int,
-    round_sim: int = 6,
-) -> list[tuple[int, list[float]]]:
-    """``n_iter`` rounds of Lloyd's k-means over (cid, vector) centroids:
-    assign every corpus vector to its nearest cell (cosine rounded to
-    ``round_sim``, cid tie-break — the same ranking the callers use at
-    query time), re-center each cell at the element-wise mean via one
-    distributed groupBy-avg, and keep the old centroid for empty cells.
-    Only K centroid rows reach the driver per round — the corpus is never
-    collected.
+def _lloyd(base: DataFrame, cbs, assign, n_iter: int):
+    """``n_iter`` rounds of Lloyd's k-means over ``m`` codebooks at once —
+    the one training loop behind IVF/SemDeDup (m=1, cosine cells) and PQ
+    (m subspaces, L2 cells). Each round attaches the codebook to
+    ``base`` (:func:`_with_codebook`), ``assign`` maps every row to its
+    (j, cell, _v) assignments — subspace, nearest codeword, the
+    (sub)vector it pulls — and each cell re-centers at the element-wise
+    mean via one distributed groupBy-avg; a cell with no rows keeps its
+    codeword. Only m·ks·dim mean values reach the driver per round — the
+    corpus is never collected.
 
     Determinism caveat: the re-center means come from distributed F.avg,
     whose floating-point summation order is partition-dependent, so the
-    refined centroids can differ from an oracle's in low-order bits. The
-    round(cos, round_sim) tie-break makes an assignment flip vanishingly
-    unlikely (a cosine would have to land within ~1e-16 of a 0.5e-6
+    refined codebooks can differ from an oracle's in low-order bits. The
+    round(·, 6) tie-break of both assignments makes a flip vanishingly
+    unlikely (a distance would have to land within ~1e-16 of a 0.5e-6
     rounding boundary) but not impossible — the oracle parity this buys
     is probabilistic, not exact. Callers that need bit-exact parity pass
-    the SAME refined centroids to both sides (which the registry queries
-    do: oracles receive the literal centroid values)."""
-    dim = len(cents[0][1]) if cents else 0
-    base = corpus.select(
-        F.col(vec).alias("_v"), vec_norm(F.col(vec)).alias("_n")
-    )
+    the SAME trained codebook to both sides."""
+    if n_iter <= 0:
+        return cbs
     if n_iter > 1:
-        # cache the (vector, norm) working set across rounds — without it
-        # every Lloyd round re-scans the source and recomputes the norms
-        # (the same reason MLlib's KMeans caches its norm-augmented RDD);
-        # unpersisted below, before the refined centroids go to query-time
-        # plans
+        # cache the working set across rounds — without it every round
+        # re-scans the source and recomputes per-row terms (the same
+        # reason MLlib's KMeans caches its norm-augmented RDD); unpersisted
+        # below, before the codebook goes to query-time plans
         base = base.persist()
     for _ in range(n_iter):
-        # codebook rides a one-row broadcast (_with_cents), NOT plan
-        # literals: every round's plan is the same constant-size tree, so
-        # Catalyst analyzes it in O(1) and the whole-stage-codegen cache
-        # (keyed on generated source) reuses round 1's compiled class —
-        # the per-round ~0.3-1 s replan/recompile this family paid is gone
-        assigned = _with_cents(base, cents).select(
-            F.element_at(_cents_rank_cols("_v", "_n", round_sim), 1).alias(
-                "cell"
-            ),
-            F.col("_v"),
-        )
-        # element-wise mean via posexplode: one avg over (cell, pos) keys
-        # (map-side partial agg; <= K*dim groups) instead of `dim` separate
-        # avg expressions — the small plan analyzes in a fraction of the
-        # time and shuffles the same K*dim partials
+        # element-wise mean via posexplode: one avg over (j, cell, pos)
+        # keys (map-side partial agg; <= m*ks*dim groups) instead of one
+        # avg expression per position — the small plan analyzes in a
+        # fraction of the time and shuffles the same partials
         means = (
-            assigned.select("cell", F.posexplode("_v"))
-            .groupBy("cell", "pos")
+            assign(_with_codebook(cbs, base)[0])
+            .select("j", "cell", F.posexplode("_v"))
+            .groupBy("j", "cell", "pos")
             .agg(F.avg(F.col("col").cast("double")).alias("m"))
         )
-        new = dict(cents)
-        acc: dict[int, dict[int, float]] = {}
-        for r in means.collect():  # <= n_centroids * dim rows
-            acc.setdefault(r["cell"], {})[r["pos"]] = float(r["m"])
-        for cell, by_pos in acc.items():
-            if len(by_pos) == dim:
-                new[cell] = [by_pos[i] for i in range(dim)]
-        cents = sorted(new.items())
+        acc: dict[tuple[int, int], dict[int, float]] = {}
+        for r in means.collect():
+            acc.setdefault((r["j"], r["cell"]), {})[r["pos"]] = float(r["m"])
+        # a mean replaces a codeword only when it covers exactly the
+        # codeword's positions: a cell holding a longer vector, or only
+        # shorter ones, keeps its codeword (cid == position)
+        cbs = [list(cb) for cb in cbs]
+        for (j, cid), got in acc.items():
+            if len(got) == len(cbs[j][cid][1]):
+                cbs[j][cid] = (cid, [got[i] for i in range(len(got))])
     if n_iter > 1:
         base.unpersist()
-    return cents
+    return cbs
+
+
+def _ivf_cents(
+    corpus: DataFrame,
+    *,
+    vec: str,
+    key: str,
+    n: int,
+    n_iter: int,
+    round_sim: int = 6,
+) -> list[tuple[int, list[float]]]:
+    """The ``n`` (cid, centroid) pairs of ivf_topk and semantic_dedup:
+    md5-smallest seed, then ``n_iter`` Lloyd rounds assigning each corpus
+    vector to its nearest cell by :func:`_cell_rank` (rounded cosine,
+    cid tie-break — the same ranking the callers use at query time)."""
+    base = corpus.select(F.col(vec).alias("_v"), vec_norm(F.col(vec)).alias("_n"))
+
+    def cells(df: DataFrame) -> DataFrame:
+        return df.select(
+            F.lit(0).alias("j"),
+            F.element_at(_cell_rank("_v", "_n", round_sim), 1)["cid"].alias("cell"),
+            "_v",
+        )
+
+    seed = _md5_seed(corpus, vec=vec, key=key, n=n)
+    return _lloyd(base, [list(enumerate(seed))], cells, n_iter)[0]
 
 
 def ivf_topk(
@@ -712,48 +680,34 @@ def ivf_topk(
     n_centroids (map-only), then one equi-join on cell id —
     O(rows·n_probe/n_centroids) pair work.
     """
-    cent_rows = (
-        corpus.select(key, vec)
-        .orderBy(F.md5(F.col(key).cast("string")))
-        .limit(n_centroids)
-        .collect()
-    )
-    cents = [(i, [float(x) for x in r[1]]) for i, r in enumerate(cent_rows)]
-
-    cents = _lloyd_refine(corpus, cents, vec=vec, n_iter=n_iter)
-
+    cents = _ivf_cents(corpus, vec=vec, key=key, n=n_centroids, n_iter=n_iter)
     # query-time assignment reads the codebook from the same one-row
-    # broadcast as training (_with_cents): identical doubles, identical
-    # fold — but the corpus/query plans now share ONE constant-size
-    # generated-code shape with the training rounds instead of each
-    # carrying a fresh K*dim-literal tree. ONE codebook DataFrame for
-    # both sides so the broadcast exchange is built once and reused.
-    cb = _cents_df(corpus.sparkSession, cents)
-    c = (
+    # broadcast as training: identical doubles, identical fold, one
+    # constant-size generated-code shape for every plan of the family
+    c, q = _with_codebook(
+        [cents],
         corpus.select(
             F.col(key).alias("neighbor_id"),
             F.col(vec).alias("_cv"),
             vec_norm(F.col(vec)).alias("_n"),
-        )
-        .crossJoin(F.broadcast(cb))
-    ).select(
-        "neighbor_id",
-        "_cv",
-        F.element_at(_cents_rank_cols("_cv", "_n"), 1).alias("cell"),
-    )
-    q = (
+        ),
         queries.select(
             F.col(key).alias("query_id"),
             F.col(vec).alias("_qv"),
             vec_norm(F.col(vec)).alias("_n"),
-        )
-        .crossJoin(F.broadcast(cb))
-    ).select(
+        ),
+    )
+    c = c.select(
+        "neighbor_id",
+        "_cv",
+        F.element_at(_cell_rank("_cv", "_n"), 1)["cid"].alias("cell"),
+    )
+    q = q.select(
         "query_id",
         "_qv",
-        F.explode(
-            F.slice(_cents_rank_cols("_qv", "_n"), 1, n_probe)
-        ).alias("cell"),
+        F.explode(F.slice(_cell_rank("_qv", "_n"), 1, n_probe)["cid"]).alias(
+            "cell"
+        ),
     )
     sim = cosine(F.col("_qv"), F.col("_cv"))
     if round_sim is not None:
@@ -765,41 +719,6 @@ def ivf_topk(
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
     return scored.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") <= k).drop("_rk")
-
-
-def embedding_near_dup_pairs(
-    corpus: DataFrame,
-    *,
-    vec: str = "embedding",
-    key: str = "vec_id",
-    threshold: float = 0.9,
-    dim: int = 64,
-    bits: int = 6,
-    tables: int = 6,
-    seed: int = 42,
-) -> DataFrame:
-    """Corpus pairs (a<b) with cosine >= threshold, via LSH candidates."""
-    ids = corpus.select(F.col(key).alias("id"), F.col(vec).alias("v"))
-    cands = None
-    for t in range(tables):
-        planes = _hyperplanes(dim, bits, seed + t)
-        b = ids.withColumn("bucket", lsh_bucket("v", planes))
-        a_, b_ = b.alias("a"), b.alias("b")
-        c = a_.join(
-            b_, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id"))
-        ).select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.v").alias("va"),
-            F.col("b.v").alias("vb"),
-        )
-        cands = c if cands is None else cands.unionByName(c)
-    return (
-        cands.dropDuplicates(["id_a", "id_b"])
-        .withColumn("cosine_sim", cosine(F.col("va"), F.col("vb")))
-        .filter(F.col("cosine_sim") >= threshold)
-        .select("id_a", "id_b", "cosine_sim")
-    )
 
 
 def quantize_int8(vec: Column, *, scale: float = 127.0) -> Column:
@@ -878,9 +797,8 @@ def semantic_dedup(
     Deviations from the paper, both documented and deterministic: centroids
     seed from the ``n_centroids`` md5-smallest corpus vectors (the
     ivf_topk sampling), optionally refined by ``n_iter`` deterministic
-    Lloyd rounds (_lloyd_refine — the oracle mirrors each round), and
-    the within-cluster sweep is the
-    greedy prefix rule — a row is dropped when ANY row ranked before it
+    Lloyd rounds (_lloyd — the oracle mirrors each round), and the
+    within-cluster sweep is the greedy prefix rule — a row is dropped when ANY row ranked before it
     (farther from the centroid, id tie-break) is ``>= threshold`` similar,
     whether or not that earlier row itself survived. This makes the result
     a pure function of the pair set — no sequential scan to parallelize
@@ -897,39 +815,29 @@ def semantic_dedup(
     reproducible across engines; the vectorized sweep makes the identical
     decision via the single-compare form (_ge_round_cut).
     """
-    cent_rows = (
-        corpus.select(key, vec)
-        .orderBy(F.md5(F.col(key).cast("string")))
-        .limit(n_centroids)
-        .collect()
+    if not threshold > 0:  # _ge_round_cut's proof: HALF_UP rounds away from 0
+        raise ValueError(f"semantic_dedup threshold must be > 0, got {threshold!r}")
+    cents = _ivf_cents(
+        corpus, vec=vec, key=key, n=n_centroids, n_iter=n_iter, round_sim=round_sim
     )
-    cents = [(i, [float(x) for x in r[1]]) for i, r in enumerate(cent_rows)]
-    cents = _lloyd_refine(corpus, cents, vec=vec, n_iter=n_iter, round_sim=round_sim)
-
     # centroid cosines are ROUNDED before the argmax so assignment (and
     # its cid tie-break) is bit-identical to the SQL oracle's
     # round(s, 6) ... ORDER BY s DESC, cid — an unrounded sort could
     # pick a different cell than the oracle within 1e-6 of a tie; the
-    # row norm is computed once per row (see _cents_rank)
-    assigned = _with_cents(
+    # row norm is computed once per row (see _cell_rank)
+    (assigned,) = _with_codebook(
+        [cents],
         corpus.select(
             F.col(key).alias("id"),
             F.col(vec).alias("v"),
             vec_norm(F.col(vec)).alias("_n"),
         ),
-        cents,
-    ).select(
+    )
+    assigned = assigned.select(
         "id",
         "v",
         "_n",
-        F.element_at(
-            F.expr(
-                "array_sort("
-                + _cents_struct_array_cols_sql("v", "_n", round_sim)
-                + ")"
-            ),
-            1,
-        ).alias("_b"),
+        F.element_at(_cell_rank("v", "_n", round_sim), 1).alias("_b"),
     ).select(
         "id",
         "v",
@@ -953,11 +861,15 @@ def semantic_dedup(
     # the norms still computed ONCE per row in the assignment stage
     # (vec_norm's fold order == cosine()'s norm subterm). Each dropped id
     # appears at most once (cells partition rows), so no distinct is needed.
+    # Per (cell, dimension), rows with a norm only: a NULL vector or
+    # element, or a length mismatch (zip_with NULL-pads), gave the join
+    # form a NULL cosine, which never drops a row — such rows are kept.
     from pyspark.sql.types import StructField, StructType
 
     dropped = (
-        ranked.select("id", "v", "_n", "rn", "cell")
-        .groupBy("cell")
+        ranked.filter(F.col("_n").isNotNull())
+        .select("id", "v", "_n", "rn", "cell", F.size("v").alias("_d"))
+        .groupBy("cell", "_d")
         .applyInPandas(
             _cell_pair_dropper(threshold, round_sim),
             StructType([StructField("id", ranked.schema["id"].dataType)]),
@@ -974,10 +886,12 @@ def semantic_dedup(
     )
 
 
-def _l2_argmin_sql(sub_sql: str, cents, round_d: int = 6) -> str:
-    """SQL text for the 0-based id of the codeword nearest (squared L2)
-    to the ``sub_sql`` subvector — the PQ/encode twin of
-    :func:`_cents_rank`'s determinism contract, cheaper by construction:
+def _pq_code_sql(vcol: str, j: int, sd: int, round_d: int = 6) -> tuple[str, str]:
+    """SQL text for subspace ``j`` of ``vcol``: (the ``sd``-long
+    subvector, the 0-based id of its nearest codeword by squared L2 in
+    the attached `_cb`[j], :func:`_with_codebook`) — the one PQ
+    assignment of training and encoding, and the twin of
+    :func:`_cell_rank`'s determinism contract, cheaper by construction:
     distances round to ``round_d`` and land in one flat double array, and
     ``array_position(a, array_min(a))`` picks the FIRST minimum — the
     lowest-cid tie-break a SQL oracle's row_number() ORDER BY round(d,6)
@@ -985,17 +899,7 @@ def _l2_argmin_sql(sub_sql: str, cents, round_d: int = 6) -> str:
     first PQ draft array_sorted ks structs per subspace per row; at
     m=16/ks=32 that was 512 struct builds + 16 sorts per row and
     dominated the encode stage)."""
-    lut = "array(" + ",".join(
-        "array(" + ",".join(_dlit(x) for x in cv) + ")" for _cid, cv in cents
-    ) + ")"
-    return _l2_argmin_from_lut_sql(sub_sql, lut, round_d)
-
-
-def _l2_argmin_from_lut_sql(sub_sql: str, lut_sql: str, round_d: int = 6) -> str:
-    """Core of :func:`_l2_argmin_sql` with the codebook LUT supplied as
-    arbitrary SQL text — a literal array (original form) or a `_pq_cb`
-    broadcast-column slice (:func:`_with_pq_cb`); the fold is identical
-    either way, so the chosen codes never depend on which form fed it."""
+    sub = f"slice(`{vcol}`, {j * sd + 1}, {sd})"
     # ONE transform over the codebook, not ks unrolled distance
     # expressions: the unrolled form built a 512-node tree at m=16/ks=32
     # whose Catalyst analysis + codegen dominated the whole PQ query on
@@ -1004,7 +908,7 @@ def _l2_argmin_from_lut_sql(sub_sql: str, lut_sql: str, round_d: int = 6) -> str
     # same doubles, same round, array_position still picks the FIRST
     # minimum (lowest-cid tie-break) — so certified hashes are unchanged.
     arr = (
-        f"transform({lut_sql}, cw -> round(aggregate(zip_with({sub_sql}, cw,"
+        f"transform(`_cb`[{j}], cw -> round(aggregate(zip_with({sub}, cw,"
         " (x, y) -> (cast(x as double) - y) * (cast(x as double) - y)),"
         f" 0.0D, (acc, x) -> acc + x), {round_d}))"
     )
@@ -1012,26 +916,10 @@ def _l2_argmin_from_lut_sql(sub_sql: str, lut_sql: str, round_d: int = 6) -> str
     # writing array_position(arr, array_min(arr)) inline duplicates the
     # whole ks-distance expression (Catalyst does not CSE it; the doubled
     # form measured ~40% slower and shipped 5 MiB task binaries)
-    return (
-        "(element_at(transform(array(" + arr + "),"
-        " a -> array_position(a, array_min(a))), 1) - 1)"
+    return sub, (
+        "cast(element_at(transform(array(" + arr + "),"
+        " a -> array_position(a, array_min(a))), 1) - 1 as int)"
     )
-
-
-def _with_pq_cb(df: DataFrame, cb) -> DataFrame:
-    """Attach the full per-subspace PQ codebook (m × ks × dim/m doubles)
-    as ONE one-row broadcast column `_pq_cb` — the PQ twin of
-    :func:`_with_cents`, with the same bit-parity argument: the doubles
-    are exactly the ones the literal form embedded; only the plan shape
-    changes (constant-size expression tree, codegen-cache hits across
-    Lloyd rounds, broadcast id instead of a codebook in every task
-    closure)."""
-    spark = df.sparkSession
-    lut = [[[float(x) for x in cw] for _cid, cw in cb_j] for cb_j in cb]
-    one = spark.createDataFrame(
-        [(lut,)], schema="_pq_cb array<array<array<double>>>"
-    )
-    return df.crossJoin(F.broadcast(one))
 
 
 def _pq_train(
@@ -1044,68 +932,29 @@ def _pq_train(
     ks: int,
     n_iter: int,
 ) -> list[list[tuple[int, list[float]]]]:
-    """Per-subspace PQ codebooks: the ``ks`` corpus vectors with the
-    smallest md5(key) seed EVERY subspace's codewords (their j-th
-    subvectors), then ``n_iter`` rounds of per-subspace Lloyd's k-means
-    refine them — ALL subspaces in one distributed job per round (each
-    row emits its m (subspace, nearest-codeword, subvector) assignments
-    via one explode, then a single groupBy(j, cell) mean), so driver
-    traffic is bounded at m*ks rows per round and the corpus is never
-    collected. Same determinism contract as _lloyd_refine: assignment by
-    round(L2^2, 6) ASC with cid tie-break, empty cells keep their
-    codeword; the re-center means come from distributed avg (see
-    _lloyd_refine's determinism caveat — round-6 protected,
-    probabilistic not exact)."""
+    """Per-subspace PQ codebooks: the ``ks`` md5-smallest corpus vectors
+    seed EVERY subspace's codewords (their j-th subvectors), then
+    ``n_iter`` :func:`_lloyd` rounds refine ALL subspaces in one
+    distributed job per round — each row emits its m (subspace,
+    nearest-codeword, subvector) assignments via one explode. Assignment
+    is round(L2^2, 6) ASC with cid tie-break (the first minimum)."""
     sd = dim // m
-    cent_rows = (
-        corpus.select(key, vec)
-        .orderBy(F.md5(F.col(key).cast("string")))
-        .limit(ks)
-        .collect()
-    )
-    cb = [
-        [
-            (i, [float(x) for x in r[1]][j * sd : (j + 1) * sd])
-            for i, r in enumerate(cent_rows)
-        ]
-        for j in range(m)
-    ]
-    if n_iter <= 0:
-        return cb
-    base = corpus.select(F.col(vec).alias("_v"))
-    if n_iter > 1:
-        base = base.persist()
-    for _ in range(n_iter):
-        # codebook via one-row broadcast (_with_pq_cb), not literals: the
-        # per-round assignment plan is constant-size and identical across
-        # rounds — see _with_cents for the full replan/codegen argument
+
+    def cells(df: DataFrame) -> DataFrame:
         entries = []
         for j in range(m):
-            sub = f"slice(`_v`, {j * sd + 1}, {sd})"
-            cell = _l2_argmin_from_lut_sql(
-                sub, f"element_at(`_pq_cb`, {j + 1})"
-            )
-            entries.append(
-                f"named_struct('j', {j}, 'cell', cast({cell} as int),"
-                f" 'sv', transform({sub}, x -> cast(x as double)))"
-            )
-        stacked = _with_pq_cb(base, cb).select(
+            sub, code = _pq_code_sql("_v", j, sd)
+            entries.append(f"named_struct('j', {j}, 'cell', {code}, '_v', {sub})")
+        return df.select(
             F.explode(F.expr("array(" + ",".join(entries) + ")")).alias("s")
-        ).select("s.j", "s.cell", "s.sv")
-        means = stacked.groupBy("j", "cell").agg(
-            *[F.avg(F.expr(f"sv[{i}]")).alias(f"m{i}") for i in range(sd)]
-        ).collect()
-        got = {
-            (r["j"], r["cell"]): [float(r[f"m{i}"]) for i in range(sd)]
-            for r in means
-        }
-        cb = [
-            [(cid, got.get((j, cid), cw)) for cid, cw in cb[j]]
-            for j in range(m)
-        ]
-    if n_iter > 1:
-        base.unpersist()
-    return cb
+        ).select("s.j", "s.cell", "s._v")
+
+    seed = _md5_seed(corpus, vec=vec, key=key, n=ks)
+    cbs = [
+        [(i, v[j * sd : (j + 1) * sd]) for i, v in enumerate(seed)]
+        for j in range(m)
+    ]
+    return _lloyd(corpus.select(F.col(vec).alias("_v")), cbs, cells, n_iter)
 
 
 def pq_topk(
@@ -1138,22 +987,19 @@ def pq_topk(
     int8_topk, with per-pair work on the reconstruction, not the raw
     vector. At 100 TB the codes column (m bytes/row) is what an index
     shard persists; the reconstruction is recomputed per scan from the
-    m*ks*(dim/m)-double codebook literal."""
+    m*ks*(dim/m)-double broadcast codebook."""
     sd = dim // m
-    cb = _pq_train(
+    cbs = _pq_train(
         corpus, vec=vec, key=key, dim=dim, m=m, ks=ks, n_iter=n_iter
     )
-    # encode + reconstruct against the broadcast codebook column (same
-    # doubles as the literal form — see _with_pq_cb); the encode fold and
-    # the first-minimum tie-break are unchanged
+    # encode + reconstruct against the broadcast codebook: the same
+    # subspace fold and first-minimum tie-break as training
     recon_parts = []
     for j in range(m):
-        sub = f"slice(`{vec}`, {j * sd + 1}, {sd})"
-        lut = f"element_at(`_pq_cb`, {j + 1})"
-        code = _l2_argmin_from_lut_sql(sub, lut)
-        recon_parts.append(f"element_at({lut}, cast({code} as int) + 1)")
+        _sub, code = _pq_code_sql(vec, j, sd)
+        recon_parts.append(f"element_at(`_cb`[{j}], {code} + 1)")
     recon = f"flatten(array({','.join(recon_parts)}))"
-    c = _with_pq_cb(corpus, cb).select(
+    c = _with_codebook(cbs, corpus)[0].select(
         F.col(key).alias("neighbor_id"), F.expr(recon).alias("_rv")
     )
     q = queries.select(

@@ -359,7 +359,7 @@ def url_sld(url: Column | str) -> Column:
 def _bind_once(col: Column, fn) -> Column:
     """Bind ``col`` to a lambda variable so every downstream reference is a
     cheap variable node and the expression tree carries ONE copy of the
-    bound subtree — the _cents_rank/_row_embed_apply compile-width pattern
+    bound subtree — the _pq_code_sql/_row_embed_apply compile-width pattern
     applied to the URL chains. Without it each chained regexp pass and each
     reference (scheme + rest + the pass-through ``when``) re-embeds its
     whole upstream tree, and the scoped-normalizer plans grew to

@@ -135,8 +135,12 @@ def cocitation_pairs(
     deduplicated and exchanged ONCE instead of once per join side, with
     no edge-set-sized broadcast build. One groupBy on the pair closes it.
 
+    A NULL target is no edge: it is filtered before the guard, so the
+    guard's distinct-target count and the collected target sets see the
+    same edge set.
+
     Output: (url_a, url_b, common_sources), url_a < url_b."""
-    e = edges.select(src, dst)
+    e = edges.select(src, dst).filter(F.col(dst).isNotNull())
     deg = e.groupBy(src).agg(F.count_distinct(F.col(dst)).alias("_d"))
     bounded = e.join(
         F.broadcast(deg.filter(F.col("_d") > max_outlinks).select(src)),

@@ -563,10 +563,25 @@ def test_semantic_round_cut_matches_spark(spark):
             assert bool(r["d"]) == mine, (threshold, scale, repr(r["v"]))
 
 
+def test_semantic_dedup_rejects_non_positive_threshold(spark):
+    """The single-compare cut above is proven for a positive threshold
+    only (HALF_UP rounds half away from zero), so semantic_dedup refuses
+    any other before running a job."""
+    from nutch_spark.datapipe.similarity import semantic_dedup
+
+    df = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<double>")
+    for threshold in (0.0, -0.5, float("nan")):
+        with pytest.raises(ValueError):
+            semantic_dedup(df, threshold=threshold)
+
+
 def test_semantic_dedup_pair_sweep_matches_join_form(spark):
     """The vectorized per-cell pair sweep must reproduce the former
     zip_with/aggregate self-join form exactly — same fold order, same
-    rounding decision — on a corpus engineered to sit near the threshold."""
+    rounding decision — on a corpus engineered to sit near the threshold,
+    with a NULL vector and two near-duplicate 9-dim vectors among the
+    8-dim rows (the join form's NULL cosine never drops a row; the sweep
+    must neither fail nor differ)."""
     import random
 
     from nutch_spark.datapipe.similarity import semantic_dedup, vec_norm
@@ -580,6 +595,8 @@ def test_semantic_dedup_pair_sweep_matches_join_form(spark):
             pert = list(base)
             pert[i % 8] += rng.uniform(-1e-4, 1e-4)
             rows.append((i + 1000, [float(x) for x in pert]))
+    # ids outside the 4 md5-smallest, so no seed centroid is hostile
+    rows += [(5000, None), (5002, [0.5] * 9), (2000, [0.5] * 8 + [0.50001])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     threshold, round_sim = 0.95, 6
 
@@ -590,8 +607,7 @@ def test_semantic_dedup_pair_sweep_matches_join_form(spark):
     # reference: the pre-vectorization JVM formulation, verbatim
     from pyspark.sql import Window
 
-    from nutch_spark.datapipe.similarity import _with_cents, _lloyd_refine
-    from nutch_spark.datapipe.similarity import _cents_struct_array_cols_sql
+    from nutch_spark.datapipe.similarity import _cell_rank, _with_codebook
 
     cent_rows = (
         df.select("vec_id", "embedding")
@@ -600,26 +616,19 @@ def test_semantic_dedup_pair_sweep_matches_join_form(spark):
         .collect()
     )
     cents = [(i, [float(x) for x in r[1]]) for i, r in enumerate(cent_rows)]
-    cents = _lloyd_refine(df, cents, vec="embedding", n_iter=0, round_sim=round_sim)
-    assigned = _with_cents(
+    (assigned,) = _with_codebook(
+        [cents],
         df.select(
             F.col("vec_id").alias("id"),
             F.col("embedding").alias("v"),
             vec_norm(F.col("embedding")).alias("_n"),
         ),
-        cents,
-    ).select(
+    )
+    assigned = assigned.select(
         "id",
         "v",
         "_n",
-        F.element_at(
-            F.expr(
-                "array_sort("
-                + _cents_struct_array_cols_sql("v", "_n", round_sim)
-                + ")"
-            ),
-            1,
-        ).alias("_b"),
+        F.element_at(_cell_rank("v", "_n", round_sim), 1).alias("_b"),
     ).select(
         "id", "v", "_n",
         F.col("_b.cid").alias("cell"),

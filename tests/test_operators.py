@@ -863,10 +863,11 @@ def test_cocitation_pairs_dedups_repeated_edges(spark):
 
     edges = spark.createDataFrame(
         # s1 cites a twice and b three times; hub repeats d but has only
-        # 3 DISTINCT targets, under a cap of 3
+        # 3 DISTINCT targets, under a cap of 3 — plus a NULL target, which
+        # is no target at all (the guard and the pairs see the same edges)
         [("s1", "a"), ("s1", "a"), ("s1", "b"), ("s1", "b"), ("s1", "b"),
          ("s2", "a"), ("s2", "b"),
-         ("hub", "a"), ("hub", "b"), ("hub", "d"), ("hub", "d")],
+         ("hub", "a"), ("hub", "b"), ("hub", "d"), ("hub", "d"), ("hub", None)],
         "src string, dst string",
     )
     got = {

@@ -20,17 +20,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import cpu_steal_s, warm_up
 from nutch_spark.plans import REGISTRY
 from nutch_spark.session import get_spark
-
-
-def cpu_steal_s() -> float:
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        return int(parts[8]) / os.sysconf("SC_CLK_TCK")
-    except Exception:  # noqa: BLE001
-        return 0.0
 
 
 def main() -> None:
@@ -51,31 +43,7 @@ def main() -> None:
     spark = get_spark("nutch_spark_qbench")
     spark.sparkContext.setLogLevel("ERROR")
     # identical warm-up to bench.py so first-rep numbers line up
-    spark.read.parquet(f"{args.sf}/lineitem.parquet").count()
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    warm = spark.range(0, 1 << 18, 1, 8)
-    warm.limit(4096).mapInPandas(lambda it: it, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
-    arr = F.transform(
-        F.sequence(F.lit(1), F.lit(5)),
-        lambda i: F.md5(F.concat_ws(" ", i.cast("string"))),
-    )
-    small = spark.range(0, 100).select(F.md5(F.col("id").cast("string")).alias("h"))
-    w = Window.partitionBy(F.col("id") % 7).orderBy("id")
-    (
-        warm.select("id", arr.alias("arr"))
-        .select("id", F.explode("arr").alias("h"))
-        .join(F.broadcast(small), "h", "left_semi")
-        .withColumn("rn", F.row_number().over(w))
-        .groupBy((F.col("id") % 97).alias("g"))
-        .agg(F.count("*").alias("c"))
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
+    warm_up(spark, args.sf)
 
     for name in names:
         fn, _oracle = REGISTRY[name]
