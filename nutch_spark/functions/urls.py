@@ -254,7 +254,7 @@ def _clean_host(url: Column | str) -> Column:
     return F.regexp_replace(raw, r"\.$", "")
 
 
-def url_domain(url: Column | str, suffixes: tuple[str, ...] | None = None) -> Column:
+def url_domain(url: Column | str) -> Column:
     """Registrable domain (eTLD+1), URLUtil.getDomainName semantics —
     crawler-commons EffectiveTldFinder.getAssignedDomain(host, false, true)
     over the ICANN section of the full public suffix list
@@ -265,27 +265,7 @@ def url_domain(url: Column | str, suffixes: tuple[str, ...] | None = None) -> Co
     www.example.co.uk.com → uk.com (private registries excluded: ICANN only);
     example.com.nn → example.com.nn (no match, non-strict → host unchanged);
     IP literals return the whole address.
-
-    ``suffixes``: optional override set of multi-label suffixes (legacy
-    surface, used by tests to pin a tiny table); None → the vendored PSL.
     """
-    host = _clean_host(url)
-    if suffixes is not None:  # legacy explicit-table path
-        parts = F.split(host, r"\.")
-        n = F.size(parts)
-        last2 = F.concat_ws(".", F.element_at(parts, -2), F.element_at(parts, -1))
-        last3 = F.concat_ws(
-            ".",
-            F.element_at(parts, -3),
-            F.element_at(parts, -2),
-            F.element_at(parts, -1),
-        )
-        return (
-            F.when(host.rlike(r"^[0-9.]+$"), host)
-            .when(n <= 2, host)
-            .when(last2.isin(*[F.lit(s) for s in suffixes]), F.when(n >= 3, last3).otherwise(host))
-            .otherwise(last2)
-        )
     # Preferred path: the registered SQL scalar function — ~9k rule
     # literals live JVM-side, so building this Column costs one py4j call
     # (the naive isin() construction marshaled every literal per call:
@@ -294,20 +274,9 @@ def url_domain(url: Column | str, suffixes: tuple[str, ...] | None = None) -> Co
 
     spark = SparkSession.getActiveSession()
     if spark is not None and _ensure_psl_functions(spark):
-        return F.call_function("nutch_psl_domain", host)
-    # fallback (no active session / no SQL-UDF support): pure Column build,
-    # host bound ONCE as a lambda variable — the CASE chain references it
-    # ~30 times and conditional branches defeat subexpression elimination
-    # (unbound, try_parse_url re-runs per branch: 12 µs/row vs 1.4 µs/row)
-    return F.element_at(
-        F.transform(
-            F.array(host),
-            lambda h: F.when(h.rlike(r"^[0-9.]+$"), h)  # IP literal
-            # non-strict fallback: unknown TLD → host as-is
-            .otherwise(F.coalesce(_psl_chain(h, "domain"), h)),
-        ),
-        1,
-    )
+        return F.call_function("nutch_psl_domain", _clean_host(url))
+    # fallback (no active session / no SQL-UDF support): pure Column build
+    return url_domain_inline(url)
 
 
 def url_domain_inline(url: Column) -> Column:
@@ -345,11 +314,6 @@ def url_suffix(url: Column | str) -> Column:
         ),
         1,
     )
-
-
-def url_sld(url: Column | str) -> Column:
-    """Second-level grouping used by DomainStatistics MODE_DOMAIN."""
-    return url_domain(url)
 
 
 # ---------------------------------------------------------------------------

@@ -33,7 +33,6 @@ def linkrank(
     cfg: NutchConfig = DEFAULT,
     src: str = "src",
     dst: str = "dst",
-    use_checkpoint: bool = True,
     skew_buckets: int | None = None,
     skew_hot_threshold: int = 1_000_000,
 ) -> DataFrame:
@@ -152,21 +151,20 @@ def linkrank(
                 + F.lit(d) * (F.lit(rank_one) + F.coalesce("contrib_sum", F.lit(0.0)))
             ).alias("score"),
         ).unionByName(no_in.select("url", const_score))
-        if use_checkpoint:
-            # Checkpoint to truncate lineage: WITHOUT one, 10 iterations of
-            # join+agg stack into one mega-plan whose analysis alone
-            # dominates runtime (35s → ~8s at sf0.01); at scale the
-            # untruncated plan would also re-execute on failure recovery.
-            # LAZY (r16): localCheckpoint replaces the logical plan with a
-            # LogicalRDD immediately whether or not it is eager — analysis
-            # stays O(1) either way — but eager=True additionally ran one
-            # driver-synchronous job PER ITERATION. With no per-round
-            # convergence decision (the count is FIXED at 10,
-            # LinkRank.java), the rounds can chain lazily and the final
-            # action materializes all 10 checkpointed RDDs in ONE job;
-            # each round's partitions still persist at first computation,
-            # so failure recovery replays at most one round.
-            scores = scores.localCheckpoint(eager=False)
+        # Checkpoint to truncate lineage: WITHOUT one, 10 iterations of
+        # join+agg stack into one mega-plan whose analysis alone
+        # dominates runtime (35s → ~8s at sf0.01); at scale the
+        # untruncated plan would also re-execute on failure recovery.
+        # LAZY (r16): localCheckpoint replaces the logical plan with a
+        # LogicalRDD immediately whether or not it is eager — analysis
+        # stays O(1) either way — but eager=True additionally ran one
+        # driver-synchronous job PER ITERATION. With no per-round
+        # convergence decision (the count is FIXED at 10,
+        # LinkRank.java), the rounds can chain lazily and the final
+        # action materializes all 10 checkpointed RDDs in ONE job;
+        # each round's partitions still persist at first computation,
+        # so failure recovery replays at most one round.
+        scores = scores.localCheckpoint(eager=False)
     return scores
 
 

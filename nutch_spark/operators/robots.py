@@ -40,12 +40,6 @@ def _text_col(robots: DataFrame, content: str) -> F.Column:
     return col
 
 
-def _directives(content: str = "content") -> F.Column:
-    """Explode robots.txt lines into (field, value) pairs, tracking the
-    active user-agent group the way SimpleRobotRules does."""
-    return F.split(F.col(content), "\n")
-
-
 def parse_robots(robots: DataFrame, *, host: str = "host", content: str = "content") -> DataFrame:
     """(host, content) → (host, agent, rule_type allow|disallow, prefix).
 

@@ -174,30 +174,6 @@ def protocol_status_stats(
     )
 
 
-def group_stats(
-    df: DataFrame,
-    group: Column | str,
-    numeric: str,
-    *,
-    percentiles: tuple[float, ...] = (),
-    group_alias: str = "group_key",
-) -> DataFrame:
-    """Generic per-group numeric profile: the aggregation core shared by A1
-    (per-status), A3 (hostdb numeric metadata fields) and A9 rollups."""
-    g = F.col(group) if isinstance(group, str) else group
-    x = F.col(numeric)
-    aggs = [
-        F.count(F.lit(1)).alias("cnt"),
-        F.min(x).alias(f"min_{numeric}"),
-        F.max(x).alias(f"max_{numeric}"),
-        F.avg(x).alias(f"avg_{numeric}"),
-        F.sum(x).alias(f"sum_{numeric}"),
-    ]
-    for p in percentiles:
-        aggs.append(F.expr(f"percentile({numeric}, {p})").alias(f"pct{int(p * 100)}_{numeric}"))
-    return df.groupBy(g.alias(group_alias)).agg(*aggs)
-
-
 def fetch_latency_stats(
     fetch_log: DataFrame,
     *,

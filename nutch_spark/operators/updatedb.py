@@ -113,11 +113,6 @@ def aggregate_updates(
     )
 
 
-def default_schedule(fetch_time: Column, interval: Column) -> tuple[Column, Column]:
-    """DefaultFetchSchedule: next = fetch_time + interval (DefaultFetchSchedule.java:32-47)."""
-    return fetch_time + F.make_interval(secs=interval.cast("double")), interval
-
-
 def parse_host_specific_intervals(
     text: str, default_min: float, default_max: float
 ) -> dict[str, tuple[float, float]]:

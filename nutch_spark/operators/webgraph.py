@@ -93,21 +93,6 @@ def top_nodes(nodes: DataFrame, n: int, metric: str = "inlink_score") -> DataFra
     return nodes.orderBy(F.desc(metric), F.asc("url")).limit(n)
 
 
-def link_dump(edges: DataFrame, nodes: DataFrame) -> DataFrame:
-    """LinkDumper view (scoring/webgraph/LinkDumper.java): per target, the
-    inlinking pages with their scores."""
-    e = edges.alias("e")
-    n = nodes.alias("n")
-    joined = e.join(n, F.col("e.src") == F.col("n.url"), "left").select(
-        F.col("e.dst").alias("url"),
-        F.struct(
-            F.col("e.src").alias("from_url"),
-            F.col("n.inlink_score").alias("score"),
-        ).alias("inlink"),
-    )
-    return joined.groupBy("url").agg(F.array_sort(F.collect_list("inlink")).alias("inlinks"))
-
-
 def cocitation_pairs(
     edges: DataFrame,
     *,

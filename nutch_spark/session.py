@@ -141,21 +141,3 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
     for c in ntz:
         df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Read the driver's parquet tables; returns dict name -> DataFrame."""
-    if not names:
-        names = (
-            "region",
-            "nation",
-            "customer",
-            "supplier",
-            "part",
-            "orders",
-            "lineitem",
-            "events",
-            "documents",
-            "embeddings",
-        )
-    return {n: read_table(spark, sf_dir, n) for n in names}

@@ -70,7 +70,7 @@ def test_linkrank_outdeg_from_full_edge_set(spark):
         ],
         "src string, dst string",
     )
-    scores = {r["url"]: r["score"] for r in linkrank(edges, use_checkpoint=False).collect()}
+    scores = {r["url"]: r["score"] for r in linkrank(edges).collect()}
     # after iteration 1 the contribution from a.com/1 to each target is
     # score/3 (full out-degree), not score/2 (post-dedup degree). With
     # out_deg=3 both x.com targets receive identical contributions.
@@ -84,8 +84,8 @@ def test_linkrank_deterministic_across_runs(spark):
         + [("http://t.com/x", f"http://a.com/{i}") for i in range(50)],
         "src string, dst string",
     ).repartition(8)
-    s1 = sorted(linkrank(edges, use_checkpoint=False).collect())
-    s2 = sorted(linkrank(edges.repartition(3), use_checkpoint=False).collect())
+    s1 = sorted(linkrank(edges).collect())
+    s2 = sorted(linkrank(edges.repartition(3)).collect())
     assert s1 == s2
 
 

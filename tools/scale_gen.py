@@ -7,8 +7,8 @@ don't see a K-copy flood of every document) pushes the fanned heavy stages
 into the compute-bound regime where the core ratio is observable.
 
 This is a MEASUREMENT tool: it writes a new directory for one-off probe
-runs (tools/qbench.py --sf <dir>); nothing in the engine, bench, or oracle
-path reads its output.
+runs (`SPARK_GRAFT_SF_DIR=<dir> python bench.py <query> ...`); nothing in
+the engine, bench, or oracle path reads its output.
 
 Usage: python tools/scale_gen.py <src_sf_dir> <dst_dir> [doc_k] [emb_k] [li_k]
 """
