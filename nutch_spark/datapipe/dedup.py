@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from nutch_spark.datapipe.textstats import bind_once, fingerprint, tokens
+from nutch_spark.iterate import iterate
 
 
 def exact_dedup(
@@ -665,9 +666,7 @@ def dup_components(
     Scale shape: one shuffle per iteration (join on the edge endpoint), and
     the iteration count is the component DIAMETER, not size — dedup clusters
     are near-cliques, so 2-4 rounds in practice; ``max_iter`` bounds
-    pathological chains. Each round materializes eagerly via localCheckpoint
-    (lazy checkpoints re-run the whole lineage). On a real cluster use
-    ``checkpoint()`` to truncate lineage against executor loss.
+    pathological chains.
 
     Only nodes that appear in a pair participate in the iteration: a node
     with no edges is its own component by definition, so the (typically
@@ -675,11 +674,9 @@ def dup_components(
     the end instead of riding every round's shuffle — per-round cost scales
     with the DUPLICATE subgraph, not the corpus.
 
-    Convergence is detected with ``Observation`` metrics harvested from the
-    SAME job that materializes the round — the new label is compared to the
-    old one row-wise in the step select, so there is no separate
-    count()-with-self-join driver sync per iteration (each round is exactly
-    one Spark job).
+    Convergence is read from a metric of the round's own output (the step
+    compares new and old label row-wise), so no separate
+    count()-with-self-join runs per round.
 
     ``groups`` (optional): pre-collapsed EXACT-duplicate groups as a
     (``key``, ``rep``) table — every member mapped to its group
@@ -695,8 +692,6 @@ def dup_components(
     component label is the min over quotient ids (= the true min member
     when representatives are group minima).
     """
-    from pyspark.sql import Observation
-
     sym = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")).unionByName(
         pairs.select(F.col(id_b).alias("a"), F.col(id_a).alias("b"))
     )
@@ -710,10 +705,7 @@ def dup_components(
                 groups.select(F.col(rep).alias("_gm"), F.col(rep).alias("_gr"))
             )  # rep self-rows, so every quotient id expands at the end
             .distinct()
-            # LAZY checkpoint: materializes once inside the edges job below
-            # (its first consumer) and is reused by the expansion joins —
-            # an eager one here costs a whole extra driver-synchronous job
-            # for the same result (bench: ~0.4 s/job on small inputs)
+            # reused by the quotient joins and the final expansion
             .localCheckpoint(eager=False)
         )
         # quotient: pair endpoints rewrite to their representative
@@ -740,8 +732,6 @@ def dup_components(
     labels = (
         ids.join(touched, "id", "left_semi")  # iterate ONLY the dup subgraph
         .withColumn("lab", F.col("id"))
-        # lazy: materializes inside round 0's job (edges is already a
-        # checkpointed RDD, so the lineage this defers is one semi-join)
         .localCheckpoint(eager=False)
     )
     singletons = ids.join(touched, "id", "left_anti")
@@ -770,31 +760,20 @@ def dup_components(
             )
         )
 
-    # BLOCKS of two propagation rounds per driver-synchronous job (r16):
-    # each round's job cost at bench scale is dominated by fixed
-    # scheduling/planning, and labels only ever DECREASE, so convergence
-    # can be read from the SECOND round of a block — "no label shrank in
-    # round 2k" is the same fixpoint test as before (running one extra
-    # no-op round past the fixpoint cannot change any label). Near-clique
-    # dedup graphs that needed 2 jobs now need 1; chains of diameter d
-    # need ceil(d/2)+? blocks instead of d+1 jobs. max_iter still bounds
-    # the TOTAL round count.
-    it = 0
-    while it < max_iter:
-        if it + 1 < max_iter:  # two-round block; _chg read from round 2
-            stepped = step(step(labels).drop("_chg"))
-            it += 2
-        else:  # odd max_iter tail: single-round block
-            stepped = step(labels)
-            it += 1
-        obs = Observation(f"dup_components_iter_{it}")
-        labels = (
-            stepped.observe(obs, F.sum("_chg").alias("changed"))
-            .drop("_chg")
-            .localCheckpoint(eager=True)  # the one job of the block
-        )
-        if not obs.get["changed"]:  # metric from the checkpoint job — free
-            break
+    # Two rounds per checkpoint (r16): labels only ever DECREASE, so "no
+    # label shrank in the block's second round" is the fixpoint test, and
+    # one extra no-op round past the fixpoint changes nothing. An odd
+    # max_iter ends with a single round, so max_iter bounds the TOTAL.
+    labels, done = iterate(
+        labels,
+        lambda lab: step(step(lab)),
+        max_iter // 2,
+        observe=(F.sum("_chg").alias("changed"),),
+        until=lambda _, m: not m["changed"],
+    )
+    if not done:
+        labels, _ = iterate(labels, step, max_iter % 2)
+    labels = labels.drop("_chg")
     out = labels.unionByName(singletons.withColumn("lab", F.col("id")))
     if g is not None:
         # expand the quotient: every group member adopts its
@@ -978,12 +957,9 @@ def dup_components_star(
     edges (large: v > u >= m; small: m = min <= v), so only the
     neighborhood views need symmetrizing, and that is a narrow dup-free
     union of a canonical set with its swap.  Convergence = edge-set
-    fixpoint, detected by a (count, hash-sum) signature harvested via
-    ``Observation`` from the round's own localCheckpoint job — no extra
-    action, same discipline as :func:`dup_components`.
+    fixpoint, detected by a (count, hash-sum) signature of the round's
+    output equal to the previous round's.
     """
-    from pyspark.sql import Observation
-
     raw = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     edges = (  # canonical: child (greater id) -> parent (smaller id)
         raw.filter(F.col("a") != F.col("b"))
@@ -991,8 +967,6 @@ def dup_components_star(
             F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
         )
         .distinct()
-        # lazy: materializes inside round 0's big-star job — saves one
-        # driver-synchronous prep job (the dup_components discipline)
         .localCheckpoint(eager=False)
     )
 
@@ -1014,23 +988,18 @@ def dup_components_star(
             .unionByName(mins.select("a", F.col("m").alias("b")))
         )
 
-    prev_sig, converged = None, False
-    for it in range(max_iter):
-        big = star(_symmetrize(edges), large=True)
-        small = star(_symmetrize(big), large=False)
-        stepped = small.filter(F.col("a") != F.col("b")).distinct()
-        obs = Observation(f"dup_components_star_{it}")
-        edges = stepped.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            # decimal sum: a long sum of 64-bit hashes overflows under ANSI
-            F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("h"),
-        ).localCheckpoint(eager=True)
-        sig = (obs.get["n"], obs.get["h"])
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
+    def star_round(e: DataFrame) -> DataFrame:
+        small = star(_symmetrize(star(_symmetrize(e), large=True)), large=False)
+        return small.filter(F.col("a") != F.col("b")).distinct()
+
+    signature = (
+        F.count(F.lit(1)).alias("n"),
+        # decimal sum: a long sum of 64-bit hashes overflows under ANSI
+        F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("h"),
+    )
+    edges, converged = iterate(
+        edges, star_round, max_iter, observe=signature, until=lambda p, m: m == p
+    )
     if not converged:
         # a non-fixpoint edge set yields INCONSISTENT labels (a child's
         # parent may itself still have a smaller parent) — unlike label

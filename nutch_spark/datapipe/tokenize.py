@@ -18,9 +18,9 @@ Scale design (the part that matters at 100 TB):
 - Each iteration = one explode→hash-agg over the vocab (partial agg: the
   shuffle carries one row per distinct pair per partition) + a ``limit(1)``
   collect of the SINGLE best pair — the only driver traffic, O(1) per
-  round.  The vocab state is ``localCheckpoint``ed per iteration so the
-  merge-replace chain never stacks into a mega-plan (same discipline as
-  G3 LinkRank's iteration loop).
+  round.  The vocab state is ``localCheckpoint``ed per iteration
+  (``nutch_spark.iterate``) so the merge-replace chain never stacks into a
+  mega-plan.
 - **Apply is a narrow map stage**: the learned merges compile into a chain
   of literal ``replace`` calls on a separator-guarded symbol string —
   whole-stage-codegen JVM string ops, no Python, no shuffle.
@@ -42,6 +42,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from nutch_spark.iterate import iterate
 
 # U+001F unit separator: guards symbol boundaries so a merge needle
 # ``SlSrS`` can never match across two unrelated symbols (a pair (a, b)
@@ -116,16 +118,16 @@ def bpe_train(
     """Learn ``num_merges`` merges from a (word, freq) vocabulary.
 
     Deterministic: ties break on (left, right) lexicographically, so the
-    merge list is independent of partitioning.  Each iteration is one
-    Spark job over the vocab plus a 1-row collect; the evolving symbol
-    state is eagerly localCheckpoint'ed (lineage O(1), executor-loss
-    re-execution bounded to one round — use checkpoint() on a cluster).
+    merge list is independent of partitioning.  Each merge is one top-pair
+    collect over the symbol state, which also materializes the previous
+    merge's lazily checkpointed state.
     """
     state = vocab.select(
         symbolize(word).alias("s"), F.col(freq).cast("long").alias("freq")
     ).localCheckpoint(eager=True)
     merges: list[tuple[str, str]] = []
-    for _ in range(num_merges):
+
+    def merge_top(state: DataFrame) -> DataFrame | None:
         top = (
             pair_counts(state)
             .orderBy(F.desc("cnt"), F.asc("left"), F.asc("right"))
@@ -133,12 +135,12 @@ def bpe_train(
             .collect()
         )
         if not top or top[0]["cnt"] < min_count:
-            break
+            return None
         left, right = top[0]["left"], top[0]["right"]
         merges.append((left, right))
-        state = state.withColumn("s", merge_expr("s", left, right)).localCheckpoint(
-            eager=True
-        )
+        return state.withColumn("s", merge_expr("s", left, right))
+
+    iterate(state, merge_top, num_merges)
     return merges
 
 

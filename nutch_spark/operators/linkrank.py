@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from nutch_spark.config import DEFAULT, NutchConfig
 from nutch_spark.functions.urls import url_domain
+from nutch_spark.iterate import iterate
 
 
 def linkrank(
@@ -33,25 +34,8 @@ def linkrank(
     cfg: NutchConfig = DEFAULT,
     src: str = "src",
     dst: str = "dst",
-    skew_buckets: int | None = None,
-    skew_hot_threshold: int = 1_000_000,
 ) -> DataFrame:
-    """Compute LinkRank scores; returns (url, score).
-
-    ``skew_buckets``: when set, the per-iteration inverter join (edge set
-    keyed by src × unique per-src scores) routes through
-    ``datapipe.skew.skew_salted_join`` — the ONE join in the crawl
-    pipeline whose left side repeats a key up to a page's out-degree, so
-    a mega-hub src (sitemap index pages, link farms) pins a reducer in
-    the plain join. The right side is unique per src, so hot-slice
-    replication costs exactly ``buckets`` rows per hot page. Keys hotter
-    than ``skew_hot_threshold`` salt; results are multiset-identical to
-    the plain join (test_linkrank asserts equality). The OTHER join
-    shapes in this family don't need salting and deliberately don't get
-    the flag: J2's update join and J4's score join are unique-key per
-    side (no key can be hot), and the hostdb/contribution rollups are
-    groupBy aggregations where Spark's partial (map-side) aggregation
-    already absorbs skew."""
+    """Compute LinkRank scores; returns (url, score)."""
     d = float(cfg.linkrank_damping)
 
     # dedup contributions per source page and per source domain (:558-597).
@@ -73,20 +57,15 @@ def linkrank(
         .union(page_uniq.select(F.col(dst).alias("url")))
         .distinct()
     )
-    # Materialize the static tables eagerly: reused every iteration. The
-    # contribution denominator is the node's FULL webgraph outlink count
+    # The static tables are reused every round. The contribution
+    # denominator is the node's FULL webgraph outlink count
     # (Node.getNumOutlinks, set before the per-target domain dedup) — so
     # out_deg comes from page_uniq, not the domain-deduped edge set.
     # localCheckpoint, NOT cache: cache keeps the logical plan, and the
     # domain-dedup window carries the full-PSL InSet literals — re-analyzing
-    # that plan in all 10 iteration jobs costs more driver time than the
-    # whole computation. Checkpointing truncates it to a LogicalRDD.
-    # LAZY checkpoints: each still truncates the Catalyst plan to a
-    # LogicalRDD immediately (analysis stays O(1) per iteration — the
-    # original reason for checkpointing here); materialization is deferred
-    # to the first consuming job instead of costing one driver-synchronous
-    # job each. nodes materializes in the count() right below; out_deg and
-    # uniq materialize inside iteration 1's job.
+    # that plan in all 10 rounds costs more driver time than the whole
+    # computation. A checkpoint, lazy or not, truncates it to a LogicalRDD
+    # at once (when a lazy one runs: nutch_spark/iterate.py).
     out_deg = page_uniq.groupBy(src).agg(
         F.count(F.lit(1)).alias("num_outlinks")
     )
@@ -122,49 +101,25 @@ def linkrank(
         F.lit(1.0 - d) + F.lit(d) * (F.lit(rank_one) + F.lit(0.0))
     ).alias("score")
 
-    scores = nodes.withColumn("score", F.lit(float(cfg.linkrank_initial_score)))
-    for _ in range(cfg.linkrank_iterations):
+    def rank_round(scores: DataFrame) -> DataFrame:
         # J5 inverter: contribution = score(src)/numOutlinks(src) (:413-494)
-        if skew_buckets:
-            from nutch_spark.datapipe.skew import skew_salted_join
-
-            joined = skew_salted_join(
-                uniq_deg,
-                scores.withColumnRenamed("url", src),
-                [src],
-                buckets=skew_buckets,
-                hot_threshold=skew_hot_threshold,
-            )
-        else:
-            joined = uniq_deg.join(scores, uniq_deg[src] == scores["url"]).drop(
-                "url"
-            )
+        joined = uniq_deg.join(scores, uniq_deg[src] == scores["url"]).drop("url")
         contribs = joined.select(
             F.col(dst).alias("url"),
             (F.col("score") / F.col("num_outlinks")).alias("contrib"),
         )
         agg = contribs.groupBy("url").agg(F.sum("contrib").alias("contrib_sum"))
-        scores = agg.select(
+        return agg.select(
             "url",
             (
                 F.lit(1.0 - d)
                 + F.lit(d) * (F.lit(rank_one) + F.coalesce("contrib_sum", F.lit(0.0)))
             ).alias("score"),
         ).unionByName(no_in.select("url", const_score))
-        # Checkpoint to truncate lineage: WITHOUT one, 10 iterations of
-        # join+agg stack into one mega-plan whose analysis alone
-        # dominates runtime (35s → ~8s at sf0.01); at scale the
-        # untruncated plan would also re-execute on failure recovery.
-        # LAZY (r16): localCheckpoint replaces the logical plan with a
-        # LogicalRDD immediately whether or not it is eager — analysis
-        # stays O(1) either way — but eager=True additionally ran one
-        # driver-synchronous job PER ITERATION. With no per-round
-        # convergence decision (the count is FIXED at 10,
-        # LinkRank.java), the rounds can chain lazily and the final
-        # action materializes all 10 checkpointed RDDs in ONE job;
-        # each round's partitions still persist at first computation,
-        # so failure recovery replays at most one round.
-        scores = scores.localCheckpoint(eager=False)
+
+    scores = nodes.withColumn("score", F.lit(float(cfg.linkrank_initial_score)))
+    # a fixed round count (LinkRank.java), so no convergence test
+    scores, _ = iterate(scores, rank_round, cfg.linkrank_iterations)
     return scores
 
 

@@ -274,6 +274,23 @@ def test_dup_components_chain(spark):
     assert not out[6]["is_duplicate"]
 
 
+def test_dup_components_max_iter_truncates_propagation(spark):
+    """max_iter bounds the TOTAL round count, odd values included (two-round
+    blocks plus a single-round tail): after k rounds, node i of the chain
+    0-1-...-9 holds the min label within distance k, max(0, i - k)."""
+    from nutch_spark.datapipe.dedup import dup_components
+
+    nodes = spark.createDataFrame([(i,) for i in range(12)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "id_a long, id_b long"
+    )
+    for k in (1, 2, 3, 4):
+        got = dup_components(nodes, pairs, max_iter=k).collect()
+        assert {r["doc_id"]: r["component"] for r in got} == {
+            i: max(0, i - k) if i < 10 else i for i in range(12)
+        }, k
+
+
 def test_pii_scrub(spark):
     from nutch_spark.datapipe.textstats import pii_scrub
 

@@ -332,24 +332,6 @@ def test_linkrank_domain_dedup(spark):
     assert "http://y.same.com/2" in got  # dropped edge, but still a node
 
 
-def test_linkrank_skew_salted_matches_plain(spark):
-    """skew_buckets routes the inverter join through skew_salted_join:
-    with a hub page hot enough to trip the census, scores must be
-    IDENTICAL to the plain join's (the salt only spreads rows)."""
-    hub = [("http://hub.com/", f"http://t{i}.com/") for i in range(40)]
-    rest = [("http://a.com/", "http://b.com/"), ("http://b.com/", "http://a.com/")]
-    edges = spark.createDataFrame(hub + rest, "src string, dst string")
-    cfg = NutchConfig(linkrank_iterations=2)
-    plain = {r["url"]: r["score"] for r in linkrank(edges, cfg=cfg).collect()}
-    salted = {
-        r["url"]: r["score"]
-        for r in linkrank(
-            edges, cfg=cfg, skew_buckets=4, skew_hot_threshold=10
-        ).collect()
-    }
-    assert salted == plain and len(plain) == 43
-
-
 # --- WebGraph build: A11 outlink dedup + latest-segment-wins (G2) -----------
 
 

@@ -6,6 +6,7 @@ parse-zip entry naming."""
 from __future__ import annotations
 
 import json
+import os
 
 from pyspark.sql import functions as F
 
@@ -320,7 +321,7 @@ def test_slash_normalizer_plugin_data_file(spark):
     from nutch_spark.functions.urls import parse_slashes_file, slash_normalize
 
     rules = parse_slashes_file(
-        open("/root/reference/src/plugin/urlnormalizer-slash/data/slashes.txt").read()
+        open(os.path.join(os.path.dirname(__file__), "data", "slashes.txt")).read()
     )
     assert rules == {"www.example.org": True, "www.example.net": False}
     vectors = [

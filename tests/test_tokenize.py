@@ -62,6 +62,22 @@ def test_bpe_train_ties_break_lexicographically(spark):
     assert merges == [("a", "b"), ("x", "y")]
 
 
+def test_bpe_train_job_count_bounded(spark):
+    """Each merge costs its top-pair collect only: the per-merge state
+    checkpoint is lazy and materializes inside the next collect."""
+    sc = spark.sparkContext
+    d = _docs(spark, "low lower lowest newer newest wider", "low low new")
+    vocab = word_freqs(d)
+    group = "test_bpe_train_job_count_bounded"
+    sc.setJobGroup(group, group)
+    try:
+        merges = bpe_train(vocab, 4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(merges) == 4
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2 * len(merges) + 2
+
+
 def test_bpe_train_min_count_stops(spark):
     d = _docs(spark, "ab ab cd")  # (c,d) appears once < min_count=2
     merges = bpe_train(word_freqs(d), 5, min_count=2)
