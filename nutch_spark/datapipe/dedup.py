@@ -18,7 +18,8 @@ every executor, every run, and in the DuckDB oracle).
 Scale notes (100 TB): every operator here is
   map (shingle/hash) -> explode -> shuffle on shingle/band key -> self-join
 with frequency capping on hot shingles (``max_shingle_freq``) so a pathological
-shingle shared by millions of docs cannot produce a quadratic bucket.
+shingle shared by millions of docs cannot produce a quadratic bucket; the
+guarded self-join is ``skew.bucket_pairs``.
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from nutch_spark.datapipe.skew import bucket_pairs
 from nutch_spark.datapipe.textstats import bind_once, fingerprint, tokens
 from nutch_spark.iterate import iterate
 
@@ -83,8 +85,7 @@ def ngram_jaccard_pairs(
     *,
     n: int = 3,
     threshold: float = 0.5,
-    max_shingle_freq: int = 1000,
-    hash_shingles: bool = False,
+    max_shingle_freq: int | None = 1000,
     arrs: DataFrame | None = None,
 ) -> DataFrame:
     """All pairs (a, b), a<b, with shingle-set Jaccard >= threshold.
@@ -96,18 +97,10 @@ def ngram_jaccard_pairs(
 
     Exact algorithm via inverted index: explode shingles, self-join on the
     shingle, count common shingles per pair, divide by the union size.
-    ``max_shingle_freq`` drops ubiquitous shingles (stop-phrases) before the
-    join — the standard guard against quadratic hot buckets at scale.
-
-    ``hash_shingles=True`` replaces the n-token shingle STRING with its
-    60-bit h64 before the frequency count and self-join, shrinking the
-    shuffled key from tens of bytes to one long — the knob for
-    network-bound clusters where exchange bytes dominate. Measured at
-    sf0.1 local[32] the two are at PARITY (~10 s each: md5 hashing costs
-    what the smaller memory-local shuffle saves), so the bitwise-exact
-    string join stays the default; results differ only under h64
-    collisions (~d^2/2^61 pairs over d distinct shingles — none observed:
-    identical 2317 pairs both ways at sf0.1).
+    ``max_shingle_freq`` drops ubiquitous shingles (stop-phrases, more
+    than this many docs) before the join — the standard guard against
+    quadratic hot buckets at scale (``skew.bucket_pairs``); ``None``
+    turns it off.
     """
     # materialize the per-doc shingle ARRAYS once: three separate
     # exchanges (sizes, frequency census, the self-join input) otherwise
@@ -123,16 +116,10 @@ def ngram_jaccard_pairs(
             F.col(key).alias("id"), shingles(text, n).alias("_sharr")
         ).localCheckpoint(eager=False)
     sh = arrs.select("id", F.explode("_sharr").alias("sh"))
-    if hash_shingles:
-        sh = sh.select("id", h64(F.col("sh")).alias("sh"))
     sizes = arrs.select("id", F.size("_sharr").alias("n_sh"))
-    if max_shingle_freq:
-        freq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("f"))
-        sh = sh.join(freq.filter(F.col("f") <= max_shingle_freq).select("sh"), "sh")
-    a, b = sh.alias("a"), sh.alias("b")
     common = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        bucket_pairs(sh, "id", ["sh"], max_bucket=max_shingle_freq)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("common"))
     )
     sa = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
@@ -290,7 +277,7 @@ def _lsh_band_candidates(
     """LSH candidate pairs (id_a, id_b) from (id, minhash) signatures: band
     the signature into ``bands`` md5 bucket keys, equi-join per band, and
     guard hot buckets (over ``max_bucket`` ids) by sub-bucketing on the
-    full-signature digest (census ≤ rows/max_bucket groups, broadcast).
+    full-signature digest (``skew.bucket_pairs`` with ``split``).
     Shared by the pair-mode verifier (minhash_lsh_pairs) and the
     cluster-mode quotient path (minhash_dup_clusters, where ``sigs`` holds
     one representative row per DISTINCT signature)."""
@@ -315,39 +302,29 @@ def _lsh_band_candidates(
             )
         ).alias("band", "bucket"),
     )
-    if max_bucket is not None:
-        # census of over-cap band buckets: tiny by construction
-        # (≤ rows/max_bucket groups survive the HAVING), broadcastable
-        banded = banded.localCheckpoint(eager=False)
-        hot = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_bucket)
-            .select("band", "bucket", F.lit(True).alias("_hot"))
-        )
-        banded = (
-            banded.join(F.broadcast(hot), ["band", "bucket"], "left")
-            .withColumn(
-                "bucket",
-                F.when(
-                    F.col("_hot"),
-                    F.concat(F.col("bucket"), F.lit(":"), F.col("_sd")),
-                ).otherwise(F.col("bucket")),
-            )
-            .select("id", "band", "bucket")
-        )
-    else:
-        banded = banded.select("id", "band", "bucket")
-    a, b = banded.alias("a"), banded.alias("b")
+    return bucket_pairs(
+        banded, "id", ["band", "bucket"], max_bucket=max_bucket, split="_sd"
+    ).dropDuplicates(["id_a", "id_b"])
+
+
+def _estimate_verified(
+    cands: DataFrame, sigs: DataFrame, num_hashes: int, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, jaccard) for candidate pairs whose MinHash estimate —
+    the fraction of matching signature components, the standard unbiased
+    estimator — is at least ``threshold``. Only the num_hashes-long
+    signatures join to each candidate (bounded payload per pair)."""
+    va = sigs.select(F.col("id").alias("id_a"), F.col("minhash").alias("mh_a"))
+    vb = sigs.select(F.col("id").alias("id_b"), F.col("minhash").alias("mh_b"))
+    est = F.size(
+        F.filter(F.zip_with("mh_a", "mh_b", lambda x, y: x == y), lambda m: m)
+    ) / F.lit(float(num_hashes))
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+        cands.join(va, "id_a")
+        .join(vb, "id_b")
+        .withColumn("jaccard", est)
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -396,8 +373,9 @@ def minhash_lsh_pairs(
     rows by construction and broadcasts. ``None`` disables the guard
     (same-signature sub-bucketing collapses the quadratic blowup to the
     true duplicate clusters; the residual risk is a cluster of identical
-    signatures, which IS the answer's own size). Same census+sub-bucket
-    pattern as similarity.text_embed_neardup_pairs.
+    signatures, which IS the answer's own size). The census and the
+    sub-bucketed self-join are ``skew.bucket_pairs``, the guard every
+    near-dup operator shares.
     """
     rows_per_band = num_hashes // bands
     # shingle arrays materialize ONCE and feed both the signatures and
@@ -414,22 +392,7 @@ def minhash_lsh_pairs(
         sigs, bands=bands, rows_per_band=rows_per_band, max_bucket=max_bucket
     )
     if verify == "estimate":
-        # signature-only verification: estimated Jaccard = fraction of
-        # matching minhash components (bounded payload per candidate)
-        va = sigs.select(F.col("id").alias("id_a"), F.col("minhash").alias("mh_a"))
-        vb = sigs.select(F.col("id").alias("id_b"), F.col("minhash").alias("mh_b"))
-        est = F.size(
-            F.filter(
-                F.zip_with("mh_a", "mh_b", lambda x, y: x == y), lambda m: m
-            )
-        ) / F.lit(float(num_hashes))
-        return (
-            candidates.join(va, "id_a")
-            .join(vb, "id_b")
-            .withColumn("jaccard", est)
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
+        return _estimate_verified(candidates, sigs, num_hashes, threshold)
     # verify candidates with exact shingle Jaccard (arrays reused from
     # the checkpoint above — not recomputed from text)
     va = arrs.select(F.col("id").alias("id_a"), F.col("_sharr").alias("sh_a"))
@@ -515,20 +478,10 @@ def minhash_dup_clusters(
     cands = _lsh_band_candidates(
         rep_sigs, bands=bands, rows_per_band=rows_per_band, max_bucket=max_bucket
     )
-    va = rep_sigs.select(F.col("id").alias("id_a"), F.col("minhash").alias("mh_a"))
-    vb = rep_sigs.select(F.col("id").alias("id_b"), F.col("minhash").alias("mh_b"))
-    est = F.size(
-        F.filter(F.zip_with("mh_a", "mh_b", lambda x, y: x == y), lambda m: m)
-    ) / F.lit(float(num_hashes))
-    edges = (
-        cands.join(va, "id_a")
-        .join(vb, "id_b")
-        .filter(est >= F.lit(threshold))
-        .select("id_a", "id_b")
-    )
+    edges = _estimate_verified(cands, rep_sigs, num_hashes, threshold)
     return dup_components(
         df.select(key),
-        edges,
+        edges.select("id_a", "id_b"),
         key,
         max_iter=max_iter,
         groups=members,
@@ -1142,7 +1095,7 @@ def winnowing_containment_pairs(
     k: int = 5,
     window: int = 4,
     threshold: float = 0.5,
-    max_fp_freq: int = 1000,
+    max_fp_freq: int | None = 1000,
     round_to: int = 6,
 ) -> DataFrame:
     """Containment candidate pairs from winnowing fingerprints — the use
@@ -1158,8 +1111,8 @@ def winnowing_containment_pairs(
     Scale shape: the same inverted-index discipline as
     :func:`ngram_jaccard_pairs` — equi-join on the fingerprint with
     ``max_fp_freq`` dropping ubiquitous fingerprints (boilerplate shared
-    by millions of docs must not form a quadratic bucket); sizes join on
-    the doc key. Never all-pairs.
+    by millions of docs must not form a quadratic bucket; ``None`` turns
+    the cap off); sizes join on the doc key. Never all-pairs.
     """
     # materialized once: the fingerprint pipeline (per-gram md5 + two
     # window passes) otherwise re-runs for the sizes aggregate, the
@@ -1169,14 +1122,9 @@ def winnowing_containment_pairs(
         df, text, key, k=k, window=window
     ).localCheckpoint(eager=False)
     sizes = fps.groupBy("id").agg(F.count(F.lit(1)).alias("nf"))
-    use = fps
-    if max_fp_freq:
-        freq = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("f"))
-        use = fps.join(freq.filter(F.col("f") <= max_fp_freq).select("fp"), "fp")
-    a, b = use.alias("a"), use.alias("b")
     shared = (
-        a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        bucket_pairs(fps, "id", ["fp"], max_bucket=max_fp_freq)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("shared_fps"))
     )
     sa = sizes.select(F.col("id").alias("id_a"), F.col("nf").alias("n_a"))

@@ -23,9 +23,11 @@ import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from nutch_spark.datapipe.skew import bucket_pairs
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -482,6 +484,28 @@ def image_dhash(
     )
 
 
+def dhash_band_keys(max_hamming: int, bands: int) -> Column:
+    """The ``bands`` disjoint bit-bands of the 64-bit ``dhash`` column as
+    an array of band keys (band b = bits [b·w, (b+1)·w), w = 64 // bands).
+    Two hashes within Hamming distance ``max_hamming`` agree on at least
+    one band key whenever max_hamming < bands (pigeonhole), so
+    ``max_hamming >= bands`` raises ``ValueError``. Shared by the batch
+    and streaming dHash near-dup operators."""
+    if max_hamming >= bands:
+        raise ValueError(
+            f"max_hamming={max_hamming} needs bands > max_hamming "
+            f"(pigeonhole guarantee), got bands={bands}"
+        )
+    width = 64 // bands
+    mask = (1 << width) - 1
+    return F.array(
+        *[
+            F.shiftrightunsigned("dhash", b * width).bitwiseAND(F.lit(mask))
+            for b in range(bands)
+        ]
+    )
+
+
 def dhash_near_dup(
     hashes: DataFrame,
     *,
@@ -531,13 +555,7 @@ def dhash_near_dup(
       certified full-recall consumers (``mm_dhash_neardup`` and the
       audio/video near-dup wrappers) keep the semantics their oracles
       model."""
-    if max_hamming >= bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} needs bands > max_hamming "
-            f"(pigeonhole guarantee), got bands={bands}"
-        )
-    width = 64 // bands
-    mask = (1 << width) - 1
+    keys = dhash_band_keys(max_hamming, bands)
     h = (
         hashes.filter(F.col("dhash").isNotNull())
         .select("media_id", "dhash")
@@ -545,48 +563,16 @@ def dhash_near_dup(
     )
     # exact-duplicate pairs: one shuffle on the 64-bit hash; the join's
     # output IS the answer for identical images (hamming 0)
-    ea, eb = h.alias("ea"), h.alias("eb")
-    exact = ea.join(
-        eb,
-        (F.col("ea.dhash") == F.col("eb.dhash"))
-        & (F.col("ea.media_id") < F.col("eb.media_id")),
-    ).select(
-        F.col("ea.media_id").alias("id_a"),
-        F.col("eb.media_id").alias("id_b"),
-        F.lit(0).cast("int").alias("hamming"),
+    exact = bucket_pairs(h, "media_id", ["dhash"], max_bucket=None).withColumn(
+        "hamming", F.lit(0).cast("int")
     )
     # banded candidates over DISTINCT hash values only
-    dh = h.select("dhash").distinct()
-    keys = F.array(
-        *[
-            F.shiftrightunsigned("dhash", b * width)
-            .bitwiseAND(F.lit(mask))
-            for b in range(bands)
-        ]
+    bd = h.select("dhash").distinct().select(
+        "dhash", F.posexplode(keys).alias("band", "bkey")
     )
-    bd = dh.select("dhash", F.posexplode(keys).alias("band", "bkey"))
-    if max_band_bucket is not None:
-        bd = bd.localCheckpoint(eager=False)
-        hot = (
-            bd.groupBy("band", "bkey")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_band_bucket)
-            .select("band", "bkey", F.lit(True).alias("_hot"))
-        )
-        bd = (
-            bd.join(F.broadcast(hot), ["band", "bkey"], "left")
-            .filter(F.col("_hot").isNull())
-            .select("dhash", "band", "bkey")
-        )
-    ca, cb = bd.alias("ca"), bd.alias("cb")
     hash_pairs = (
-        ca.join(
-            cb,
-            (F.col("ca.band") == F.col("cb.band"))
-            & (F.col("ca.bkey") == F.col("cb.bkey"))
-            & (F.col("ca.dhash") < F.col("cb.dhash")),
-        )
-        .select(F.col("ca.dhash").alias("_ha"), F.col("cb.dhash").alias("_hb"))
+        bucket_pairs(bd, "dhash", ["band", "bkey"], max_bucket=max_band_bucket)
+        .select(F.col("id_a").alias("_ha"), F.col("id_b").alias("_hb"))
         .dropDuplicates(["_ha", "_hb"])
         .withColumn(
             "hamming", F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb"))).cast("int")
@@ -1259,36 +1245,25 @@ def video_near_dup(
     over videos: (video, hash) pairs dedup to one row each, hashes seen
     in more than ``hot_hash_cap`` videos are dropped before the
     candidate join (black frames / title cards / test patterns appear in
-    unboundedly many videos and carry no identity signal — same
-    anti-quadratic guard as the n-gram shingle cap in
+    unboundedly many videos and carry no identity signal — the
+    ``skew.bucket_pairs`` guard, as for the n-gram shingle cap in
     dedup.ngram_jaccard_pairs), candidates come from ONE equi-join on
     the 64-bit hash, and per-video frame counts join back as a
     dimension-sized side. NULL hashes (undecodable frames) never index.
     """
+    # materialized once: the distinct feeds both the sizes and the
+    # guarded self-join, which are separate Spark jobs
     f = (
         frames.filter(F.col("dhash").isNotNull())
         .select("media_id", "dhash")
         .distinct()
+        .localCheckpoint(eager=False)
     )
     sizes = f.groupBy("media_id").agg(F.count("*").alias("_n"))
-    keep = (
-        f.groupBy("dhash")
-        .agg(F.count("*").alias("_vids"))  # f is distinct per (video, hash)
-        .filter(F.col("_vids") <= hot_hash_cap)
-        .select("dhash")
-    )
-    idx = f.join(keep, "dhash")
+    # f is distinct per (video, hash): a bucket's rows count its videos
     pairs = (
-        idx.alias("a")
-        .join(
-            idx.alias("b"),
-            (F.col("a.dhash") == F.col("b.dhash"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .groupBy(
-            F.col("a.media_id").alias("id_a"),
-            F.col("b.media_id").alias("id_b"),
-        )
+        bucket_pairs(f, "media_id", ["dhash"], max_bucket=hot_hash_cap)
+        .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("shared_frames"))
         .filter(F.col("shared_frames") >= min_shared)
     )

@@ -24,6 +24,8 @@ from decimal import ROUND_CEILING, Decimal
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from nutch_spark.datapipe.skew import bucket_pairs
+
 
 def _ge_round_cut(threshold: float, scale: int) -> float:
     """Smallest double v for which ``round(v, scale) >= threshold`` under
@@ -291,11 +293,10 @@ def text_embed_neardup_pairs(
     digest: inside a hot bucket only 1e-6-identical vectors (exact and
     reordered copies — the pairs a dedup pass actually needs, scoring
     1.0) still pair; sign-equal-but-different documents stop generating
-    candidates. The census of hot buckets is tiny by construction
-    (≤ n/max_bucket rows) and broadcasts. The embedding table is
-    localCheckpoint-ed once so the self-join's two sides reuse one
-    computation instead of re-running the featurizer per side (the same
-    materialize-once discipline as minhash_lsh_pairs)."""
+    candidates. The census and the sub-bucketed self-join are
+    ``skew.bucket_pairs`` (census ≤ n/max_bucket rows, broadcast); it
+    materializes the embedding table once, so the self-join's two sides
+    do not re-run the featurizer per side."""
     # norm > 0, not n_tokens > 0: a doc whose tokens all CANCEL (same
     # bucket, opposite signs) keeps the zero vector — its cosine against
     # anything is 0/0 = NaN, which BOTH engines order above 0.99, and
@@ -308,54 +309,35 @@ def text_embed_neardup_pairs(
     q_expr = (
         "transform(embedding, x -> cast(floor(x * 1000000.0D) as bigint))"
     )
-    c = (
-        emb.withColumn(
-            "bucket",
-            F.array_join(
-                F.transform(
-                    "embedding", lambda x: F.when(x >= 0, "1").otherwise("0")
-                ),
-                "",
+    c = emb.withColumn(
+        "bucket",
+        F.array_join(
+            F.transform(
+                "embedding", lambda x: F.when(x >= 0, "1").otherwise("0")
             ),
-        )
-        .withColumn(
-            "_qd",
-            F.expr(
-                f"md5(concat_ws(',', transform({q_expr}, x -> cast(x as string))))"
-            ),
-        )
-        .localCheckpoint(eager=True)
-    )
-    hot = (
-        c.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > max_bucket)
-        .select("bucket", F.lit(True).alias("_hot"))
-    )
-    keyed = (
-        c.join(F.broadcast(hot), "bucket", "left")
-        .withColumn(
-            "_k",
-            F.when(
-                F.col("_hot"), F.concat(F.col("bucket"), F.lit(":"), F.col("_qd"))
-            ).otherwise(F.col("bucket")),
-        )
-    )
-    a = keyed.select(
-        "_k", F.col(key).alias("id_a"), F.col("embedding").alias("va")
-    )
-    b = keyed.select(
-        "_k", F.col(key).alias("id_b"), F.col("embedding").alias("vb")
+            "",
+        ),
+    ).withColumn(
+        "_qd",
+        F.expr(
+            f"md5(concat_ws(',', transform({q_expr}, x -> cast(x as string))))"
+        ),
     )
     return (
-        a.join(b, ["_k"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        bucket_pairs(
+            c,
+            key,
+            ["bucket"],
+            max_bucket=max_bucket,
+            split="_qd",
+            carry=("embedding",),
+        )
         .select(
             "id_a",
             "id_b",
-            F.round(cosine(F.col("va"), F.col("vb")), round_sim).alias(
-                "cosine_sim"
-            ),
+            F.round(
+                cosine(F.col("embedding_a"), F.col("embedding_b")), round_sim
+            ).alias("cosine_sim"),
         )
         .filter(F.col("cosine_sim") >= threshold)
     )

@@ -18,6 +18,11 @@ joins completely normally — so the replication cost is
 Results are EXACTLY those of the plain join (the salt only spreads
 rows; every (l, r) pair of a hot key meets on exactly one salt value),
 which is what the oracle certifies.
+
+The same census guards every near-duplicate operator's bucket self-join
+(MinHash LSH bands, n-gram shingles, winnowing fingerprints, sign
+buckets, dHash band keys, video frame hashes): ``hot_keys`` is the one
+census and ``bucket_pairs`` the one self-join behind it.
 """
 
 from __future__ import annotations
@@ -88,14 +93,9 @@ def skew_salted_join(
             "skew_salted_join supports how in "
             "{'inner','left','right','full'}; got %r" % (how,)
         )
-    hot = (
-        left.groupBy(*on)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > hot_threshold)
-        .select(*on)
-    )
-    left_cold = left.join(F.broadcast(hot), on, "left_anti")
-    right_cold = right.join(F.broadcast(hot), on, "left_anti")
+    hot = hot_keys(left, on, hot_threshold)
+    left_cold = left.join(hot, on, "left_anti")
+    right_cold = right.join(hot, on, "left_anti")
     cold = left_cold.join(right_cold, on, mode)
 
     # per-row salt: hash of the left row's HASHABLE columns (xxhash64
@@ -113,11 +113,11 @@ def skew_salted_join(
     salt = F.pmod(
         F.xxhash64(*[F.col(c) for c in hashable]), F.lit(buckets)
     ).cast("int")
-    left_hot = left.join(F.broadcast(hot), on, "left_semi").withColumn(
+    left_hot = left.join(hot, on, "left_semi").withColumn(
         "_salt", salt
     )
     right_hot = (
-        right.join(F.broadcast(hot), on, "left_semi")
+        right.join(hot, on, "left_semi")
         .withColumn(
             "_salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
         )
@@ -130,3 +130,83 @@ def skew_salted_join(
         "_salt"
     )
     return cold.unionByName(hot_joined)
+
+
+def hot_keys(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """The hot-key census: the distinct ``keys`` of ``df`` that carry more
+    than ``cap`` rows, broadcast-hinted. One partial-aggregated groupBy;
+    the output cannot exceed |df| / cap rows, so it always broadcasts."""
+    return F.broadcast(
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") > cap)
+        .select(*keys)
+    )
+
+
+def bucket_pairs(
+    rows: DataFrame,
+    id: str,
+    keys: list[str],
+    *,
+    max_bucket: int | None,
+    split: str | None = None,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """The guarded bucket self-join: one row ``(id_a, id_b, *carry_a,
+    *carry_b)`` with ``id_a < id_b`` for every bucket (equal ``keys``)
+    two rows share — a pair meeting in several buckets appears once per
+    bucket, so callers dedup or count. Carried columns come out as
+    ``<col>_a`` and ``<col>_b``.
+
+    A bucket with more than ``max_bucket`` rows is hot: its self-join
+    would be quadratic in the bucket. With ``split=None`` its rows drop
+    before the join; with ``split=col`` they stay but pair only with rows
+    of the same bucket whose ``col`` is equal (and not NULL). Cold
+    buckets pair every row. ``max_bucket=None`` turns the guard off;
+    ``max_bucket < 1`` raises ``ValueError``.
+
+    With the guard on, the census and both join sides read ``rows``, so
+    they are materialized once (lazy ``localCheckpoint``) before the
+    census; without it the two join sides are one reused exchange."""
+    if max_bucket is not None and max_bucket < 1:
+        raise ValueError(f"max_bucket must be >= 1 or None, got {max_bucket}")
+    on = list(keys)
+    rows = rows.select(id, *on, *([split] if split else []), *carry)
+    if max_bucket is not None:
+        rows = rows.localCheckpoint(eager=False)
+        hot = hot_keys(rows, on, max_bucket)
+        if split is None:
+            rows = rows.join(hot, on, "left_anti")
+        else:
+            # every row of a bucket shares its hot flag, so a constant
+            # sub-key keeps cold buckets whole and the split value
+            # sub-buckets hot ones
+            rows = rows.join(
+                hot.withColumn("_hot", F.lit(True)), on, "left"
+            ).withColumn(
+                "_sub",
+                F.when(F.col("_hot"), F.col(split).cast("string")).otherwise(
+                    F.lit("")
+                ),
+            )
+            on = [*on, "_sub"]
+
+    def side(s: str) -> DataFrame:
+        return rows.select(
+            F.col(id).alias(f"id_{s}"),
+            *on,
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
+    return (
+        side("a")
+        .join(side("b"), on)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select(
+            "id_a",
+            "id_b",
+            *[f"{c}_a" for c in carry],
+            *[f"{c}_b" for c in carry],
+        )
+    )

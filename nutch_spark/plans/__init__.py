@@ -23,8 +23,18 @@ from nutch_spark.plans import scalar_queries  # noqa: E402,F401  (registers f1/d
 # dp_exact_dedup), the a1_quantiles frequency-weighted percentile, and the
 # p2_chm_extract memo-key fix; then the STALEST tail (everything r16's
 # window did not certify, in its prior order); the r16-certified block
-# (freshest rows) moves to the back.
+# (freshest rows) moves to the back. Ahead of that order now: every
+# near-dup query whose hot-bucket guard and bucket self-join moved into
+# datapipe/skew.py (hot_keys/bucket_pairs), and the skew-join queries
+# that share its census.
 _CERTIFY_FIRST = [
+    "dp_minhash_lsh", "dp_minhash_flood", "dp_minhash_recall",
+    "dp_minhash_clusters", "dp_ngram_jaccard", "dp_dup_components",
+    "dp_dup_components_star", "dp_cluster_retention", "dp_cluster_canonical",
+    "dp_text_embed_neardup", "mm_dhash_neardup", "mm_dhash_flood",
+    "mm_dhash_clusters", "mm_audio_neardup", "mm_video_neardup",
+    "mm_video_clusters", "dp_skew_salted_join", "dp_skew_left_join",
+    "dp_winnowing_containment",
     "dp_pq_topk", "dp_pq_recall", "dp_ivf_topk",
     "dp_ivf_recall", "dp_semantic_dedup", "g_cocitation",
     "dp_cosine_topk",
@@ -53,16 +63,15 @@ _CERTIFY_FIRST = [
     "mm_mp3_sideinfo", "st_stream_join", "dp_bloom_frontier",
     "dp_quantile_sketch", "dp_unicode_nfc", "dp_token_budget",
     "dp_quality_bins", "dp_stratified_n",
-    "dp_skew_left_join", "a1_stats_sketch", "a3_kmv_hosts",
-    "dp_text_embed", "dp_text_embed_neardup", "dp_embedding_near_dup",
-    "dp_skew_salted_join", "dp_vocab_coverage", "dp_seq_packing",
-    "dp_bm25_topk", "dp_hybrid_rrf", "dp_ngram_jaccard",
-    "dp_winnowing_containment", "dp_pipeline_clean", "s3_csv_roundtrip",
-    "s4_jsonl_roundtrip", "p2_eml_extract", "mm_dhash_flood",
+    "a1_stats_sketch", "a3_kmv_hosts",
+    "dp_text_embed", "dp_embedding_near_dup",
+    "dp_vocab_coverage", "dp_seq_packing",
+    "dp_bm25_topk", "dp_hybrid_rrf",
+    "dp_pipeline_clean", "s3_csv_roundtrip",
+    "s4_jsonl_roundtrip", "p2_eml_extract",
     "p2_midi_extract", "mm_mkv_info", "mm_exif_meta",
-    "dp_minhash_flood", "dp_minhash_lsh", "dp_minhash_recall",
-    "mm_dhash_neardup", "mm_audio_neardup", "mm_embedded_dhash",
-    "mm_video_neardup", "mm_webp_dhash", "mm_image_dhash",
+    "mm_embedded_dhash",
+    "mm_webp_dhash", "mm_image_dhash",
     "mm_video_frame_dhash", "mm_frame_samples", "mm_audio_tags",
     "dp_boilerplate_lines", "a3_group_numeric", "a3_value_counts",
     "a4_group_count", "a5_completion", "a6_json_props",
@@ -73,9 +82,7 @@ _CERTIFY_FIRST = [
     "d6_adaptive_schedule", "u1_union_distinct", "d4_depth_propagation",
     "d8_orphan_mark", "d2_cleaning_targets", "d5_similarity_score",
     "f1_url_normalize", "f1_scoped_normalize", "f1_url_parts",
-    "dp_dup_components", "dp_dup_components_star", "dp_minhash_clusters",
-    "dp_cluster_retention", "dp_cluster_canonical", "mm_dhash_clusters",
-    "mm_video_clusters", "w1_host_limit", "mm_mp4_info",
+    "w1_host_limit", "mm_mp4_info",
     "p2_font_extract", "p2_wpd_extract", "p2_psd_extract",
     "mm_heif_dhash", "j3_index_fields", "j3_multiway_join",
     "dp_winnowing", "st_hostdb_state", "p2_iwork_extract",

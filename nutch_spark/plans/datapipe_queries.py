@@ -226,7 +226,7 @@ def dp_minhash_lsh(spark, sf_dir):
     """MinHash+LSH near-dup: 32 min-hashes, 8 bands x 4 rows, band-bucket
     join for candidates, exact-Jaccard verification, hot-bucket guard ON
     (band buckets over max_bucket ids sub-bucket by full-signature digest —
-    the census+sub-bucket pattern of text_embed_neardup_pairs; inactive at
+    skew.bucket_pairs, the guard text_embed_neardup_pairs shares; inactive at
     this corpus size, modeled by the oracle regardless; dp_minhash_flood
     certifies the ACTIVE guard). The oracle reproduces the banding exactly
     (LSH recall < 100% is part of the semantics). Shuffle is O(docs x

@@ -21,7 +21,7 @@ plans are source-agnostic.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nutch_spark.config import DEFAULT, NutchConfig
@@ -393,6 +393,25 @@ def _stream_dhash_stage(media: DataFrame, *, ts: str, hash_fn=None) -> DataFrame
     )
 
 
+def _first_per_key(
+    df: DataFrame, key: Column, fallback: Column, *, ts: str, watermark: str
+) -> DataFrame:
+    """Keep the first row per ``key`` within the ``watermark`` horizon
+    (``dropDuplicatesWithinWatermark``). A row whose ``key`` is NULL is
+    keyed by its ``fallback`` (the row id) instead, in a separate key
+    space: it never matches a keyed row or another id, yet a redelivery
+    of the same id within the watermark still emits once."""
+    dedup_key = F.when(
+        key.isNotNull(), F.concat(F.lit("k:"), key.cast("string"))
+    ).otherwise(F.concat(F.lit("i:"), fallback.cast("string")))
+    return (
+        df.withColumn("_dedup_key", dedup_key)
+        .withWatermark(ts, watermark)
+        .dropDuplicatesWithinWatermark(["_dedup_key"])
+        .drop("_dedup_key")
+    )
+
+
 def streaming_image_dedup(
     media: DataFrame,
     *,
@@ -432,17 +451,8 @@ def streaming_image_dedup(
     # dropDuplicatesWithinWatermark without ever matching each other —
     # a filter/union split here would re-run the mapInPandas decode once
     # per branch (the plan has no reuse point under streaming)
-    keyed = hashed.withColumn(
-        "_dedup_key",
-        F.when(
-            F.col("dhash").isNotNull(),
-            F.concat(F.lit("h:"), F.col("dhash").cast("string")),
-        ).otherwise(F.concat(F.lit("m:"), F.col("media_id").cast("string"))),
-    )
-    return (
-        keyed.withWatermark(ts, watermark)
-        .dropDuplicatesWithinWatermark(["_dedup_key"])
-        .drop("_dedup_key")
+    return _first_per_key(
+        hashed, F.col("dhash"), F.col("media_id"), ts=ts, watermark=watermark
     )
 
 
@@ -515,23 +525,13 @@ def streaming_image_near_dup(
     (streams have no reuse point — the round-11 lesson applies to
     filter/union splits AND self-joins); feed ``pre_hashed`` rows from
     the upstream pipeline when decode dominates."""
-    if max_hamming >= bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} needs bands > max_hamming "
-            f"(pigeonhole guarantee), got bands={bands}"
-        )
-    width = 64 // bands
-    mask = (1 << width) - 1
+    from nutch_spark.datapipe.multimodal import dhash_band_keys
+
+    keys = dhash_band_keys(max_hamming, bands)
     hashed = (
         media.select("media_id", "dhash", ts)
         if pre_hashed
         else _stream_dhash_stage(media, ts=ts, hash_fn=hash_fn)
-    )
-    keys = F.array(
-        *[
-            F.shiftrightunsigned("dhash", b * width).bitwiseAND(F.lit(mask))
-            for b in range(bands)
-        ]
     )
     banded = (
         hashed.filter(F.col("dhash").isNotNull())
@@ -675,17 +675,8 @@ def streaming_video_dedup(
     signed = media.select("media_id", "payload", ts).mapInPandas(
         run, f"media_id long, video_sig string, n_frames int, {ts} timestamp"
     )
-    keyed = signed.withColumn(
-        "_dedup_key",
-        F.when(
-            F.col("video_sig").isNotNull(),
-            F.concat(F.lit("s:"), F.col("video_sig")),
-        ).otherwise(F.concat(F.lit("m:"), F.col("media_id").cast("string"))),
-    )
-    return (
-        keyed.withWatermark(ts, watermark)
-        .dropDuplicatesWithinWatermark(["_dedup_key"])
-        .drop("_dedup_key")
+    return _first_per_key(
+        signed, F.col("video_sig"), F.col("media_id"), ts=ts, watermark=watermark
     )
 
 
@@ -738,16 +729,11 @@ def streaming_embed_dedup(
     from nutch_spark.datapipe.similarity import row_embed_digest
 
     zero_digest = hashlib.md5(",".join(["0"] * dim).encode()).hexdigest()
-    keyed = docs.withColumn(
-        "_dg", row_embed_digest(F.col(text), dim=dim)
-    ).withColumn(
-        "_dedup_key",
-        F.when(
-            F.col("_dg") != zero_digest, F.concat(F.lit("d:"), F.col("_dg"))
-        ).otherwise(F.concat(F.lit("k:"), F.col(key).cast("string"))),
+    digest = row_embed_digest(F.col(text), dim=dim)
+    return _first_per_key(
+        docs.withColumn("_dg", digest),
+        F.when(F.col("_dg") != zero_digest, F.col("_dg")),
+        F.col(key),
+        ts=ts,
+        watermark=watermark,
     ).drop("_dg")
-    return (
-        keyed.withWatermark(ts, watermark)
-        .dropDuplicatesWithinWatermark(["_dedup_key"])
-        .drop("_dedup_key")
-    )

@@ -85,7 +85,7 @@ def test_lsh_pairs_subset_of_exact_pairs(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     exact = {
         (r["id_a"], r["id_b"])
-        for r in ngram_jaccard_pairs(docs, threshold=0.5, max_shingle_freq=0).collect()
+        for r in ngram_jaccard_pairs(docs, threshold=0.5, max_shingle_freq=None).collect()
     }
     lsh = {
         (r["id_a"], r["id_b"])

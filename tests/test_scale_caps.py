@@ -258,6 +258,43 @@ def test_skew_salted_join_with_map_column(spark):
     assert got == want and sum(want.values()) == 301
 
 
+def test_bucket_pairs_cap_boundary_drop_split_and_off(spark):
+    """skew.bucket_pairs, the guard every near-dup operator shares: a
+    bucket of exactly max_bucket rows still pairs, one of max_bucket + 1
+    rows is hot; a hot bucket drops (split=None) or pairs only rows equal
+    on the split column; None turns the guard off; 0 raises."""
+    import pytest
+
+    from nutch_spark.datapipe.skew import bucket_pairs
+
+    # bucket "at": 3 rows (= cap); bucket "over": 4 rows, split values
+    # x, x, y, NULL — only the two x rows share a sub-bucket
+    rows = spark.createDataFrame(
+        [(1, "at", "p", 10), (2, "at", "q", 20), (3, "at", "r", 30),
+         (4, "over", "x", 40), (5, "over", "x", 50), (6, "over", "y", 60),
+         (7, "over", None, 70)],
+        "id long, k string, s string, v int",
+    )
+
+    def pairs(**kw):
+        return sorted(tuple(r) for r in bucket_pairs(rows, "id", ["k"], **kw).collect())
+
+    at = [(1, 2), (1, 3), (2, 3)]
+    over = [(a, b) for a in range(4, 8) for b in range(a + 1, 8)]
+    assert pairs(max_bucket=3) == at
+    assert pairs(max_bucket=3, split="s") == at + [(4, 5)]
+    assert pairs(max_bucket=4) == sorted(at + over)
+    assert pairs(max_bucket=None) == sorted(at + over)
+    assert pairs(max_bucket=None, split="s") == sorted(at + over)
+    carried = bucket_pairs(rows, "id", ["k"], max_bucket=3, carry=("v",))
+    assert carried.columns == ["id_a", "id_b", "v_a", "v_b"]
+    assert sorted(tuple(r) for r in carried.collect()) == [
+        (1, 2, 10, 20), (1, 3, 10, 30), (2, 3, 20, 30)
+    ]
+    with pytest.raises(ValueError):
+        bucket_pairs(rows, "id", ["k"], max_bucket=0)
+
+
 def test_minhash_lsh_hot_bucket_guard(spark):
     """minhash_lsh_pairs' hot-bucket guard (round 14): a 21-copy flood makes
     every band bucket of the flooded signature hot at cap=4; identical
