@@ -103,13 +103,10 @@ def _seg_part(spark, seg: str, part: str):
 
 
 def _union_parts(spark, segs: list[str], part: str):
+    from nutch_spark.operators.merge import union_by_name
+
     dfs = [d for d in (_seg_part(spark, s, part) for s in segs) if d is not None]
-    if not dfs:
-        return None
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d, allowMissingColumns=True)
-    return out
+    return union_by_name(dfs) if dfs else None
 
 
 def _new_segment_name() -> str:
@@ -397,7 +394,14 @@ def cmd_parse(args) -> int:
         F.lit(seg_id).alias("segment_id"),
         F.col("parse_text").alias("text"),
     )
-    crawl_parse = emit_parse_rows(parsed, None, cfg=cfg)
+    # OPIC passScoreBeforeParsing: each outlink's share divides its parent's
+    # generate-time score; freegen fetchlists carry none, and an injected
+    # score of 1.0 stands in (FreeGenerator)
+    fl = _seg_part(spark, args.segment, "crawl_generate")
+    scored = fl is not None and "score" in fl.columns
+    crawl_parse = emit_parse_rows(
+        parsed, fl.select("url", "score") if scored else None, cfg=cfg
+    )
     parse_data.write.mode("overwrite").parquet(os.path.join(args.segment, "parse_data"))
     parse_text.write.mode("overwrite").parquet(os.path.join(args.segment, "parse_text"))
     crawl_parse.write.mode("overwrite").parquet(

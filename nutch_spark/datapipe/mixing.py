@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from nutch_spark.topk import top_k_per_group
+
 
 def _hash_bucket(key: Column, salt: str, mod: int) -> Column:
     """Deterministic md5 bucket shared by mixing/splitting/sharding — ONE
@@ -303,12 +305,9 @@ def stratified_sample_n(
     filter compiles to WindowGroupLimit — each partition keeps at most n
     rows per group BEFORE the shuffle, so a billion-row group costs n
     rows of state, not a full sort buffer."""
-    w = Window.partitionBy(group).orderBy(
-        F.md5(F.concat(F.lit(salt), F.col(key).cast("string"))),
-        F.col(key),
-    )
-    return (
-        df.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= n)
-        .drop("_rk")
+    return top_k_per_group(
+        df,
+        [group],
+        [F.md5(F.concat(F.lit(salt), F.col(key).cast("string"))), F.col(key)],
+        n,
     )

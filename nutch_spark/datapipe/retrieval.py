@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from nutch_spark.datapipe.textstats import bind_once, tokens
+from nutch_spark.topk import top_k_per_group
 
 # 1e6 quantization: ln values carry ~6 decimal digits into exact-integer
 # arithmetic; both engines floor the SAME double (ln is the one 1-ulp risk,
@@ -298,11 +299,4 @@ def rrf_fuse(
         F.sum("_c").alias("rrf_q"),
         F.count(F.lit(1)).cast("int").alias("in_lists"),
     )
-    w = Window.partitionBy(*[F.col(c_) for c_ in gb]).orderBy(
-        F.desc("rrf_q"), F.asc(id_col)
-    )
-    return (
-        fused.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
+    return top_k_per_group(fused, gb, [F.desc("rrf_q"), F.asc(id_col)], k)

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from nutch_spark.datapipe.skew import bucket_pairs
+from nutch_spark.topk import top_k_per_group
 
 
 def _ge_round_cut(threshold: float, scale: int) -> float:
@@ -376,13 +377,8 @@ def brute_force_topk(
     )
     # round_sim: rank on the ROUNDED value + id tie-break so float
     # accumulation order can never flip a cross-engine comparison
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
+    return top_k_per_group(
+        scored, ["query_id"], [F.desc("cosine_sim"), F.asc("neighbor_id")], k
     )
 
 
@@ -455,8 +451,9 @@ def lsh_topk(
         .dropDuplicates(["query_id", "neighbor_id"])
         .select("query_id", "neighbor_id", sim.alias("cosine_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return pairs.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") <= k).drop("_rk")
+    return top_k_per_group(
+        pairs, ["query_id"], [F.desc("cosine_sim"), F.asc("neighbor_id")], k
+    )
 
 
 def vec_norm(v: Column) -> Column:
@@ -699,8 +696,9 @@ def ivf_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", sim.alias("cosine_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") <= k).drop("_rk")
+    return top_k_per_group(
+        scored, ["query_id"], [F.desc("cosine_sim"), F.asc("neighbor_id")], k
+    )
 
 
 def quantize_int8(vec: Column, *, scale: float = 127.0) -> Column:
@@ -749,11 +747,8 @@ def int8_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", dot.alias("qdot"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("qdot"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
+    return top_k_per_group(
+        scored, ["query_id"], [F.desc("qdot"), F.asc("neighbor_id")], k
     )
 
 
@@ -993,11 +988,6 @@ def pq_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", sim.alias("pq_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("pq_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
+    return top_k_per_group(
+        scored, ["query_id"], [F.desc("pq_sim"), F.asc("neighbor_id")], k
     )

@@ -26,8 +26,10 @@ associatively across partitions, days, or engines.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from nutch_spark.topk import top_k_per_group
 
 # 16^15 — md5's first 15 hex digits as a uniform integer in [0, 2^60)
 _HASH_SPACE = float(16**15)
@@ -59,27 +61,26 @@ def kmv_distinct(
     double, n_sketch int)``. Exact when a group has fewer than ``k``
     distinct values (the sketch simply holds them all); otherwise the
     classic (k-1)/h_(k) estimator over the k minimum hashes. Pipeline:
-    distinct on (group, hash), then row_number ≤ k — Catalyst compiles
+    distinct on (group, hash), then top_k_per_group — Catalyst compiles
     the rank filter to WindowGroupLimit, keeping only k rows per group
     per partition, so no stage ever buffers a group's full distinct
     set."""
     gb = group_by or []
     h = _uhash(F.col(value)).alias("_h")
     # bounded at every stage: distinct is a hash aggregation on (group,
-    # hash); row_number <= k compiles to WindowGroupLimit, which keeps only
+    # hash); the top-k filter compiles to WindowGroupLimit, which keeps only
     # k rows PER GROUP per partition before (and after) the shuffle — a
     # group with 100M distinct values never materializes 100M hashes in
     # one buffer the way a collect_set-then-slice would
     distinct_h = (
         df.filter(F.col(value).isNotNull()).select(*gb, h).distinct()
     )
-    w = Window.partitionBy(*[F.col(c) for c in gb]).orderBy("_h")
-    mins = distinct_h.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") <= k
-    )
+    mins = top_k_per_group(distinct_h, gb, ["_h"], k)
+    # the kept hashes are the n <= k smallest, so the k-th is their max
+    # when n == k
+    n = F.count(F.lit(1))
     sk = mins.groupBy(*gb).agg(
-        F.max("_rn").alias("_n"),
-        F.max(F.when(F.col("_rn") == k, F.col("_h"))).alias("_hk"),
+        n.alias("_n"), F.when(n == k, F.max("_h")).alias("_hk")
     )
     est = F.when(F.col("_n") < k, F.col("_n").cast("double")).otherwise(
         F.lit(float(k - 1)) / F.col("_hk")

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nutch_spark.topk import top_k_per_group
+
 # BPE-ish word/number/punct splitter (RE2-safe, same string works in DuckDB)
 TOKEN_REGEX = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
 
@@ -338,8 +340,6 @@ def langid_trained(
     shuffles total, no global ordering anywhere. Integer scores keep the
     result bit-identical across engines and summation orders.
     """
-    from pyspark.sql import Window
-
     from nutch_spark.datapipe.langid_profiles import (
         PREFIX_CHARS,
         miss_rows,
@@ -382,10 +382,9 @@ def langid_trained(
             + (F.col("n_tri") - F.coalesce(F.col("_c"), F.lit(0))) * F.col("miss"),
         )
     )
-    rn = F.row_number().over(
-        Window.partitionBy(key).orderBy(F.col("_total").desc(), F.col("plang").asc())
+    best = top_k_per_group(
+        scored, [key], [F.col("_total").desc(), F.col("plang").asc()], 1
     )
-    best = scored.withColumn("_rn", rn).filter(F.col("_rn") == 1)
     # Script override — the standard langid layering (script first,
     # statistics within script): tiny CJK seed corpora cannot cover held-out
     # character combinations, so Unicode ranges decide the CJK/Cyrillic

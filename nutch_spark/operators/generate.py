@@ -28,25 +28,6 @@ from nutch_spark.config import DEFAULT, NutchConfig
 from nutch_spark.functions.urls import url_domain, url_host
 
 
-def top_k_per_group(
-    df: DataFrame,
-    group: Column | str,
-    order_by: list[Column],
-    k: int,
-    *,
-    rank_col: str = "rank_in_group",
-    keep_rank: bool = False,
-) -> DataFrame:
-    """Keep at most k rows per group, ordered by ``order_by`` (ties must be
-    broken by the caller adding unique columns to ``order_by`` for
-    determinism). Generic core of Generator per-host maxCount, W5 top-K
-    inlinks, NodeDumper top-n."""
-    g = F.col(group) if isinstance(group, str) else group
-    w = Window.partitionBy(g).orderBy(*order_by)
-    out = df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
-    return out if keep_rank else out.drop(rank_col)
-
-
 def generate(
     crawldb: DataFrame,
     top_n: int,

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from nutch_spark.config import DEFAULT, NutchConfig
 from nutch_spark.functions.urls import url_domain
 from nutch_spark.iterate import iterate
+from nutch_spark.topk import top_k_per_group
 
 
 def linkrank(
@@ -42,15 +43,8 @@ def linkrank(
     # The (domain, dst) winner is deterministic (min src) — dropDuplicates
     # would pick an arbitrary row per partition layout, making scores
     # nondeterministic run to run.
-    from pyspark.sql import Window
-
     page_uniq = edges.select(src, dst).dropDuplicates([src, dst])
-    dom_w = Window.partitionBy(url_domain(src), dst).orderBy(F.asc(src))
-    uniq = (
-        page_uniq.withColumn("_rk", F.row_number().over(dom_w))
-        .filter(F.col("_rk") == 1)
-        .drop("_rk")
-    )
+    uniq = top_k_per_group(page_uniq, [url_domain(src), dst], [F.asc(src)], 1)
 
     nodes = (
         page_uniq.select(F.col(src).alias("url"))

@@ -9,17 +9,27 @@ Reference:
 - /root/reference/src/java/org/apache/nutch/crawl/LinkDbMerger.java:95-110 —
   inlink sets concatenated, capped at linkdb.max.inlinks (10000).
 
-Spark: unionByName + one ranking window (single shuffle). At 100 TB, the
-window's shuffle on url is unavoidable (the reference pays the same shuffle);
-AQE coalesces the output partitions.
+Spark: ``union_by_name`` + one ``top_k_per_group`` window (single shuffle).
+At 100 TB, the window's shuffle on url is unavoidable (the reference pays the
+same shuffle); AQE coalesces the output partitions.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nutch_spark.config import DEFAULT, NutchConfig
+from nutch_spark.topk import top_k_per_group
+
+
+def union_by_name(dfs: list[DataFrame]) -> DataFrame:
+    """Union ``dfs`` by column name; a column missing from some inputs is
+    NULL in their rows."""
+    out = dfs[0]
+    for d in dfs[1:]:
+        out = out.unionByName(d, allowMissingColumns=True)
+    return out
 
 
 def latest_version_wins(
@@ -32,24 +42,14 @@ def latest_version_wins(
     """Union inputs, keep the row with the greatest ``version`` per key
     (W6 latest-version-wins / J9 segment merge)."""
     v = F.col(version) if isinstance(version, str) else version
-    union = dfs[0]
-    for d in dfs[1:]:
-        union = union.unionByName(d, allowMissingColumns=True)
     order = [v.desc()] + (tie_break or [])
-    w = Window.partitionBy(key).orderBy(*order)
-    return union.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
+    return top_k_per_group(union_by_name(dfs), [key], order, 1)
 
 
 def merge_crawldbs(dbs: list[DataFrame], *, cfg: NutchConfig = DEFAULT) -> DataFrame:
     """CrawlDbMerger: newest fetch_time wins; metadata merged newest-first
     (CrawlDbMerger.java:105-117 putAllMetaData semantics)."""
-    union = dbs[0]
-    for d in dbs[1:]:
-        union = union.unionByName(d, allowMissingColumns=True)
-    w = Window.partitionBy("url").orderBy(
-        F.desc("fetch_time"), F.desc("score"), F.asc("status")
-    )
-    ranked = union.withColumn("_rn", F.row_number().over(w))
+    union = union_by_name(dbs)
     # newest row's fields win; metadata = union with newest precedence
     merged_meta = (
         union.groupBy("url")
@@ -76,8 +76,10 @@ def merge_crawldbs(dbs: list[DataFrame], *, cfg: NutchConfig = DEFAULT) -> DataF
         )
     )
     return (
-        ranked.filter(F.col("_rn") == 1)
-        .drop("_rn", "metadata")
+        top_k_per_group(
+            union, ["url"], [F.desc("fetch_time"), F.desc("score"), F.asc("status")], 1
+        )
+        .drop("metadata")
         .join(merged_meta, "url")
         .withColumnRenamed("metadata_merged", "metadata")
     )
@@ -89,10 +91,7 @@ def merge_linkdbs(
     cfg: NutchConfig = DEFAULT,
 ) -> DataFrame:
     """LinkDbMerger: concat inlink sets, dedup, cap at linkdb.max.inlinks."""
-    union = linkdbs[0]
-    for d in linkdbs[1:]:
-        union = union.unionByName(d, allowMissingColumns=True)
-    return union.groupBy("to_url").agg(
+    return union_by_name(linkdbs).groupBy("to_url").agg(
         F.slice(
             F.array_sort(F.array_distinct(F.flatten(F.collect_list("inlinks")))),
             1,
@@ -196,17 +195,12 @@ def merge_segments(
     One window over one shuffle on the url key — same cost as plain
     latest-version-wins at any scale.
     """
-    union = parts[0]
-    for d in parts[1:]:
-        union = union.unionByName(d, allowMissingColumns=True)
     eligible = F.col("status").isin(*_REAL_FETCH_STATUSES).cast("int")
-    w = Window.partitionBy(key).orderBy(
-        F.desc(eligible), F.desc(segment), F.desc("status")
-    )
-    return (
-        union.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+    return top_k_per_group(
+        union_by_name(parts),
+        [key],
+        [F.desc(eligible), F.desc(segment), F.desc("status")],
+        1,
     )
 
 

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nutch_spark.functions.urls import url_host
+from nutch_spark.topk import top_k_per_group
 
 
 def _text_col(robots: DataFrame, content: str) -> F.Column:
@@ -172,22 +173,21 @@ def filter_allowed(
     # equal-length Allow beats Disallow (crawler-commons / REP §2.2 tie
     # resolution). Partition by the row id, not the URL, so duplicate
     # fetchlist rows sharing a URL each get their own verdict.
-    w = Window.partitionBy("_rid").orderBy(
-        F.desc(F.length(F.coalesce("prefix", F.lit("")))),
-        F.when(F.col("rule_type") == "allow", 0).otherwise(1),
-    )
-    verdict = (
-        joined.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .withColumn(
-            "_allowed",
-            F.col("rule_type").isNull() | (F.col("rule_type") == "allow"),
-        )
+    verdict = top_k_per_group(
+        joined,
+        ["_rid"],
+        [
+            F.desc(F.length(F.coalesce("prefix", F.lit("")))),
+            F.when(F.col("rule_type") == "allow", 0).otherwise(1),
+        ],
+        1,
+    ).withColumn(
+        "_allowed", F.col("rule_type").isNull() | (F.col("rule_type") == "allow")
     )
     return (
         verdict.filter(F.col("_allowed"))
         .drop(
-            "_rid", "_rhost", "_ragent", "rule_type", "prefix", "_rn",
+            "_rid", "_rhost", "_ragent", "rule_type", "prefix",
             "_allowed", "_host", "_path", "_wild", "_pattern",
         )
     )
@@ -251,16 +251,15 @@ def apply_robots_delays(
             .drop("_gh", "_exact_group")
         )
     d = (
-        cand.withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy("host").orderBy(
-                    F.when(F.col("agent") == agent.lower(), 0).otherwise(1),
-                    F.desc("crawl_delay_s"),  # deterministic: politest wins
-                )
-            ),
+        top_k_per_group(
+            cand,
+            ["host"],
+            [
+                F.when(F.col("agent") == agent.lower(), 0).otherwise(1),
+                F.desc("crawl_delay_s"),  # deterministic: politest wins
+            ],
+            1,
         )
-        .filter(F.col("_rk") == 1)
         .select(
             F.col("host").alias("_dhost"),
             F.least(F.col("crawl_delay_s"), F.lit(float(max_crawl_delay_s))).alias(

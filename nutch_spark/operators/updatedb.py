@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nutch_spark.config import DEFAULT, NutchConfig
+from nutch_spark.topk import top_k_per_group
 
 _FETCH_TO_DB = {
     "fetch_success": "db_fetched",
@@ -73,9 +74,9 @@ def aggregate_updates(
 
     linked = parse_emits.filter(F.col("status") == "linked")
     # top-K contributions by score (bounded PQ, CrawlDbReducer.java:359-373).
-    # The cap is applied BEFORE collecting: a row_number window on the same
-    # shuffle key (url) keeps only the K best-scored contributions, so a URL
-    # with 10^7 inlinks never materializes a 10^7-element array (the window
+    # The cap is applied BEFORE collecting: a top_k_per_group window on the
+    # same shuffle key (url) keeps only the K best-scored contributions, so a
+    # URL with 10^7 inlinks never materializes a 10^7-element array (the window
     # sort is external/spillable). link_count still counts ALL contributions
     # (count over the unordered full-partition frame — same single exchange).
     # The post-filter array is ≤ K elements and is folded in descending-score
@@ -83,13 +84,13 @@ def aggregate_updates(
     # drain (bit-identical to the pre-fix slice(reverse(sort)) form).
     from pyspark.sql import Window
 
-    w_rank = Window.partitionBy("url").orderBy(F.desc("_score"))
-    w_all = Window.partitionBy("url")
-    topk = (
-        linked.select("url", F.col("score").cast("double").alias("_score"))
-        .withColumn("_n", F.count(F.lit(1)).over(w_all))
-        .withColumn("_rk", F.row_number().over(w_rank))
-        .filter(F.col("_rk") <= cfg.update_max_inlinks)
+    topk = top_k_per_group(
+        linked.select("url", F.col("score").cast("double").alias("_score")).withColumn(
+            "_n", F.count(F.lit(1)).over(Window.partitionBy("url"))
+        ),
+        ["url"],
+        [F.desc("_score")],
+        cfg.update_max_inlinks,
     )
     link_agg = topk.groupBy("url").agg(
         F.aggregate(

@@ -16,11 +16,12 @@ groupBy counts joined full-outer (a self-join on an already-shuffled edge set
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nutch_spark.config import DEFAULT, NutchConfig
 from nutch_spark.functions.urls import url_domain, url_host
+from nutch_spark.topk import top_k_per_group
 
 
 def build_edges(
@@ -41,13 +42,11 @@ def build_edges(
         F.col("o.anchor").alias("anchor"),
     )
     # latest version of each page wins (WebGraph.java:367-427)
-    w = Window.partitionBy("src", "dst").orderBy(F.desc("segment_id"), F.asc("anchor"))
-    edges = edges.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
+    edges = top_k_per_group(
+        edges, ["src", "dst"], [F.desc("segment_id"), F.asc("anchor")], 1
+    )
     if dedup_by_domain:  # one edge per (src, target domain), WebGraph.java:275-296
-        wd = Window.partitionBy("src", url_domain("dst")).orderBy(F.asc("dst"))
-        edges = edges.withColumn("_rn", F.row_number().over(wd)).filter(
-            F.col("_rn") == 1
-        ).drop("_rn")
+        edges = top_k_per_group(edges, ["src", url_domain("dst")], [F.asc("dst")], 1)
     return edges
 
 

@@ -35,7 +35,7 @@ from nutch_spark.datapipe.dedup import (
     ngram_jaccard_pairs,
     simhash_fingerprints,
 )
-from nutch_spark.datapipe.similarity import cosine, lsh_topk
+from nutch_spark.datapipe.similarity import brute_force_topk, cosine, lsh_topk
 from nutch_spark.datapipe.textstats import (
     STOPWORDS,
     bpe_ish_token_count,
@@ -690,21 +690,7 @@ def dp_cosine_topk(spark, sf_dir):
     streams, dot product is a JVM-side zip_with/aggregate. Rounded to 6
     digits and ranked with an id tie-break so ordering is engine-stable."""
     emb = fan(t(spark, sf_dir, "embeddings"))
-    qs = emb.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    scored = (
-        emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"))
-        .crossJoin(F.broadcast(qs))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 5).drop("rk")
+    return brute_force_topk(emb, emb.filter(F.col("vec_id") < 20), k=5, round_sim=6)
 
 
 @q(
@@ -1854,8 +1840,6 @@ def dp_lsh_recall(spark, sf_dir):
     against the exact brute-force ranking, per query — the number a user
     tunes tables/bits against. Both sides reuse the already-certified
     operators; the oracle composes their certified SQL twins."""
-    from nutch_spark.datapipe.similarity import brute_force_topk, lsh_topk
-
     emb = fan(t(spark, sf_dir, "embeddings"))
     qs = emb.filter(F.col("vec_id") < 20)
     exact = brute_force_topk(emb, qs, k=5, round_sim=6).select(
@@ -2254,7 +2238,7 @@ def dp_ivf_recall(spark, sf_dir):
     brute-force ranking — the tuning number for the second ANN scale path,
     measured the same way as dp_lsh_recall. Both sides reuse certified
     operators; the oracle composes their certified SQL twins."""
-    from nutch_spark.datapipe.similarity import brute_force_topk, ivf_topk
+    from nutch_spark.datapipe.similarity import ivf_topk
 
     emb = fan(t(spark, sf_dir, "embeddings"))
     qs = emb.filter(F.col("vec_id") < 20)
@@ -2560,7 +2544,7 @@ def dp_int8_recall(spark, sf_dir):
     where cosine ranks normalized ones; the recall number prices both.
     Both sides reuse certified operators; the oracle composes their
     certified SQL twins."""
-    from nutch_spark.datapipe.similarity import brute_force_topk, int8_topk
+    from nutch_spark.datapipe.similarity import int8_topk
 
     emb = fan(t(spark, sf_dir, "embeddings"))
     qs = emb.filter(F.col("vec_id") < 20)
@@ -2605,7 +2589,7 @@ def dp_pq_recall(spark, sf_dir):
     number, measured the same way as dp_lsh_recall / dp_ivf_recall. Both
     sides reuse certified operators; the oracle composes their certified
     SQL twins."""
-    from nutch_spark.datapipe.similarity import brute_force_topk, pq_topk
+    from nutch_spark.datapipe.similarity import pq_topk
 
     emb = fan(t(spark, sf_dir, "embeddings"))
     qs = emb.filter(F.col("vec_id") < 20)
@@ -3841,7 +3825,6 @@ def dp_hybrid_rrf(spark, sf_dir):
     from pyspark.sql import Window as W
 
     from nutch_spark.datapipe.retrieval import bm25_topk, rrf_fuse
-    from nutch_spark.datapipe.similarity import brute_force_topk
 
     d = t(spark, sf_dir, "documents").select("doc_id", "text")
     lex = bm25_topk(d, _BM25_TERMS, k=20).select("doc_id", "rank")

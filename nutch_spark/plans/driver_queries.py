@@ -21,13 +21,13 @@ from pyspark.sql import functions as F
 
 from nutch_spark.functions.jexl import jexl_to_sql
 from nutch_spark.operators.dedup import mark_duplicates
-from nutch_spark.operators.generate import top_k_per_group
 from nutch_spark.operators.inject import merge_with_precedence
 from nutch_spark.operators.invertlinks import invert_edges
 from nutch_spark.operators.merge import latest_version_wins
 from nutch_spark.operators.stats import top_n
 from nutch_spark.operators.updatedb import adaptive_interval
 from nutch_spark.operators.webgraph import node_degrees
+from nutch_spark.topk import top_k_per_group
 
 # registry: name -> (query_fn, oracle_sql | None)
 REGISTRY: dict[str, tuple] = {}
@@ -100,7 +100,7 @@ def w1_generate_topk(spark, sf_dir):
     (crawl/Generator.java:579-619 per-host maxCount + topN)."""
     li = t(spark, sf_dir, "lineitem")
     order = [F.desc("l_extendedprice"), F.asc("l_orderkey"), F.asc("l_linenumber")]
-    sel = top_k_per_group(li, "l_suppkey", order, 3)
+    sel = top_k_per_group(li, ["l_suppkey"], order, 3)
     return (
         sel.orderBy(*order)
         .limit(100)
@@ -939,11 +939,11 @@ def w5_topk_contribs(spark, sf_dir):
     (the window sort is external/spillable). Fold order is descending score,
     matching the reference PQ drain."""
     li = t(spark, sf_dir, "lineitem")
-    w = Window.partitionBy("l_orderkey").orderBy(F.desc("l_extendedprice"))
-    topk = (
-        li.select("l_orderkey", "l_extendedprice")
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= 3)
+    topk = top_k_per_group(
+        li.select("l_orderkey", "l_extendedprice"),
+        ["l_orderkey"],
+        [F.desc("l_extendedprice")],
+        3,
     )
     return topk.groupBy("l_orderkey").agg(
         F.aggregate(

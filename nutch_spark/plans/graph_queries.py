@@ -10,13 +10,13 @@ certifies the non-textbook semantics, not generic PageRank.
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from nutch_spark.operators.dedup import mark_duplicates
 from nutch_spark.operators.linkrank import linkrank, update_scores
 from nutch_spark.operators.webgraph import node_degrees
 from nutch_spark.plans.driver_queries import REGISTRY, dsum, fan, q, t
+from nutch_spark.topk import top_k_per_group
 
 # ---------------------------------------------------------------------------
 # G3 — LinkRank (iterative), with unrolled-CTE oracle
@@ -167,12 +167,9 @@ def g5_linkdumper(spark, sf_dir):
         F.broadcast(s.select(F.col("s_suppkey").alias("src"), F.col("s_acctbal").alias("src_score"))),
         "src",
     )
-    w = Window.partitionBy("dst").orderBy(F.desc("src_score"), F.asc("src"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("src", "dst", "src_score")
-    )
+    return top_k_per_group(
+        scored, ["dst"], [F.desc("src_score"), F.asc("src")], 3
+    ).select("src", "dst", "src_score")
 
 
 # ---------------------------------------------------------------------------

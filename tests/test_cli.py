@@ -97,6 +97,15 @@ def test_inject_generate_fetch_parse(spark, crawl_env):
     assert cp.filter(cp.status == "linked").count() > 0
 
 
+def test_parse_outlink_share_divides_the_parent_score(spark, crawl_env):
+    """OPIC passScoreBeforeParsing: p0 (injected nutch.score=2.0) and p1
+    (the default 1.0) each have two outlinks, so their shares are 1.0 and
+    0.5."""
+    cp = spark.read.parquet(os.path.join(crawl_env["seg"], "crawl_parse"))
+    scores = sorted(r["score"] for r in cp.filter(cp.status == "linked").collect())
+    assert scores == [0.5, 0.5, 1.0, 1.0]
+
+
 def test_updatedb_state(spark, crawl_env):
     db = spark.read.parquet(crawl_env["crawldb"])
     by_status = {r["status"]: r["n"] for r in db.groupBy("status").agg(

@@ -7,7 +7,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from nutch_spark.config import NutchConfig
-from nutch_spark.operators.generate import generate, top_k_per_group
+from nutch_spark.operators.generate import generate
 from nutch_spark.schemas import CRAWLDB
 
 NOW = dt.datetime(2026, 1, 1)
@@ -115,16 +115,6 @@ class TestGenerateFilters:
         )
         got = generate(db, top_n=10, now=F.lit(NOW)).collect()
         assert [r["url"] for r in got] == ["http://ok.com/a"]
-
-
-class TestTopKPerGroup:
-    def test_generic(self, spark):
-        df = spark.createDataFrame(
-            [(g, v) for g in ("a", "b") for v in range(10)], ["g", "v"]
-        )
-        got = top_k_per_group(df, "g", [F.desc("v")], 3).collect()
-        assert len(got) == 6
-        assert {r["v"] for r in got} == {7, 8, 9}
 
 
 class TestPolitenessLayout:

@@ -64,18 +64,23 @@ def test_bpe_train_ties_break_lexicographically(spark):
 
 def test_bpe_train_job_count_bounded(spark):
     """Each merge costs its top-pair collect only: the per-merge state
-    checkpoint is lazy and materializes inside the next collect."""
+    checkpoint is lazy and materializes inside the next collect. Counted
+    with AQE off, because AQE runs each shuffle-map stage of a lazy
+    checkpoint as a job of its own, a number that varies run to run."""
     sc = spark.sparkContext
     d = _docs(spark, "low lower lowest newer newest wider", "low low new")
     vocab = word_freqs(d)
     group = "test_bpe_train_job_count_bounded"
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     sc.setJobGroup(group, group)
     try:
         merges = bpe_train(vocab, 4)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
     assert len(merges) == 4
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2 * len(merges) + 2
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= len(merges) + 1
 
 
 def test_bpe_train_min_count_stops(spark):
